@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.SeriesSpec
 import graft.pipeline.{Pipeline, PipelineConfig, VariableConfig}
@@ -11,13 +10,21 @@ import graft.sources.Ingest
   * [--range v=lo:hi ...] [--ts-col NAME] [--figures true]
   * Reads the wide CSV, unpivots to long form, runs the full pipeline,
   * writes the wide parquet + events/seasonal/meta CSVs (+ the
-  * per-variable PNG report figures when --figures true).
+  * per-variable PNG report figures when --figures true). The session
+  * comes from [[Sessions.local]]: a master or conf that spark-submit
+  * (or `-D`) sets wins over its local defaults.
   */
 object Cli {
+  private val Usage = "usage: graft.Cli --csv PATH --vars v1,v2 [--station NAME] " +
+    "[--out DIR] [--gap-hours H] [--range v=lo:hi,...] [--ts-col NAME] " +
+    "[--figures true]"
+
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
+    Seq("csv", "vars").foreach(k =>
+      require(opts.contains(k), s"missing required flag --$k\n$Usage"))
     val csv = opts("csv")
     val station = opts.getOrElse("station", "station")
     val out = opts.getOrElse("out", "./graft_out")
@@ -31,12 +38,7 @@ object Cli {
       }.toMap
     }.getOrElse(vars.map(_ -> VariableConfig()).toMap)
 
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]")) // spark-submit overrides
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     val wide = Ingest.readCsvTimeSeries(spark, csv,
       tsCol = opts.getOrElse("ts-col", "timestamp"))

@@ -20,12 +20,16 @@ import graft.sources.Ingest
   * is the partition axis.
   */
 object GoldenBench {
+  /** The reference's committed outputs (the golden corpus), read here
+    * and by the golden-parity specs.
+    */
+  val GoldDir = "/root/reference/scripts/water_qc_output"
+
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()
 
-    val goldDir = "/root/reference/scripts/water_qc_output"
     val wide = spark.read.parquet(
-      s"$goldDir/processed/Erkenruh_Einruhr/Erkenruh_Einruhr__qc_timeseries.parquet")
+      s"$GoldDir/processed/Erkenruh_Einruhr/Erkenruh_Einruhr__qc_timeseries.parquet")
     val ranges = Seq( // MAIN range_map (ufz_water_qc_pipeline.py:788-794)
       ("SurfaceWaterConcentration_O2_mg_L-1", 0.0, 40.0),
       ("SurfaceWaterpH_pH", 0.0, 13.0),

@@ -294,15 +294,12 @@ object SparkEntry {
     // (plateau, isolated) are self-joins of base-derived aggregates
     // against the base, and an unpersisted base gets re-planned — and
     // re-scanned — once per branch (4 parquet scans, 8 shuffles in the
-    // static plan; PlanGuardSpec pins the persisted shape).
-    // SPARK_GRAFT_QC_PERSIST=0 disables the persist for A/B
-    // measurement (BenchSubset; trade recorded in COVERAGE.md).
+    // static plan; PlanGuardSpec pins the persisted shape; the
+    // measured trade is recorded in COVERAGE.md).
     "q_qc_suite" -> ((s, dir) => {
       val d = seriesWithDelta(s, dir)
       val step = TimeIndex.inferStep(d, evSpec)
-      val cleanBase = Gaps(d, evSpec, gapHours = 24.0)
-      val clean = if (sys.env.get("SPARK_GRAFT_QC_PERSIST").contains("0"))
-        cleanBase else graft.core.Caches.persisted(cleanBase)
+      val clean = graft.core.Caches.persisted(Gaps(d, evSpec, gapHours = 24.0))
       val cfg = QcConfig(rangeMin = Some(0.0), rangeMax = Some(100.0),
         flatHours = 2.0, kVariance = 6, kZscore = 8, jumpThresh = 5.0)
       QcSuite(clean, evSpec, step, cfg)

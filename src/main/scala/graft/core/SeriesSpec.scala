@@ -86,9 +86,7 @@ object SeriesWindows {
     * max(minp, 1) finite values in the frame).
     */
   def rollingMedian(value: Column, w: WindowSpec, minp: Int): Column =
-    if (sys.env.get("SPARK_GRAFT_MEDIAN_SQL").contains("1"))
-      rollingMedianSql(value, w, minp) // A/B escape hatch for benchmarks
-    else call_function("graft_sliding_median", value, lit(minp)).over(w)
+    call_function("graft_sliding_median", value, lit(minp)).over(w)
 
   /** The pure-built-in form of [[rollingMedian]] (sort the collected
     * frame, average elements (n+1)/2 and n/2+1, 1-based; equal when n

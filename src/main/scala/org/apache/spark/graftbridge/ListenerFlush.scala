@@ -8,8 +8,8 @@ import org.apache.spark.SparkContext
   * races the delivery thread. `waitUntilEmpty` drains the bus
   * deterministically — the alternative (sleep-and-poll) is the flaky
   * pattern this bridge exists to avoid. Used only by
-  * [[graft.OpsScaleBench]]'s shuffle-volume rows; no query-path code
-  * depends on it.
+  * [[graft.OpsScaleBench]]'s shuffle-volume rows and [[graft.Dev]]'s
+  * phase counts; no query-path code depends on it.
   */
 object ListenerFlush {
   def flush(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

@@ -41,7 +41,7 @@ class FiguresSpec extends SparkTestBase {
     // committed O2 raw series must equal the histogram derived
     // independently (plain Scala over the collected values, same
     // first-fractional-digit binning as plot_decimal_hist).
-    val gold = spark.read.parquet("/root/reference/scripts/water_qc_output/" +
+    val gold = spark.read.parquet(s"${GoldenBench.GoldDir}/" +
       "processed/Erkenruh_Einruhr/Erkenruh_Einruhr__qc_timeseries.parquet")
       .select(col("SurfaceWaterConcentration_O2_mg_L-1__raw").as("clean"))
       .filter(!isnan(col("clean")))
@@ -79,7 +79,7 @@ class FiguresSpec extends SparkTestBase {
     val seasonal = graft.operators.Seasonal.stats(clean, sspec, step)
     val matrix = Figures.coverageMatrix(seasonal)
     val goldCsv = scala.io.Source.fromFile(
-      "/root/reference/scripts/water_qc_output/reports/tables/" +
+      s"${GoldenBench.GoldDir}/reports/tables/" +
         s"Erkenruh_Einruhr/${v}__seasonal_summary.csv").getLines().toSeq
     val gold = goldCsv.drop(1).map(_.split(",")).map(c => c(0) -> c(1).toDouble).toMap
     assert(matrix.map(_._1) == Seq("DJF", "MAM", "JJA", "SON"))
@@ -171,7 +171,7 @@ class FiguresSpec extends SparkTestBase {
   private lazy val goldenWide = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(
-      "/root/reference/scripts/water_qc_output/processed/Erkenruh_Einruhr/" +
+      s"${GoldenBench.GoldDir}/processed/Erkenruh_Einruhr/" +
         "Erkenruh_Einruhr__qc_timeseries.parquet")
   }
 

@@ -27,7 +27,7 @@ import graft.sources.Ingest
   */
 class GoldenQcSpec extends SparkTestBase {
 
-  private val goldDir = "/root/reference/scripts/water_qc_output"
+  private val goldDir = GoldenBench.GoldDir
   private val spec = SeriesSpec(Seq("series"))
 
   private lazy val wide: DataFrame = {

@@ -15,7 +15,7 @@ import graft.sources.Ingest
   */
 class GoldenSpec extends SparkTestBase {
 
-  private val goldDir = "/root/reference/scripts/water_qc_output"
+  private val goldDir = GoldenBench.GoldDir
   private val tables = s"$goldDir/reports/tables/Erkenruh_Einruhr"
   private val spec = SeriesSpec(Seq("series"))
 

@@ -97,4 +97,8 @@ class PipelineSpec extends SparkTestBase {
       .agg(median(abs(col("wrtds_resid")))).head().getDouble(0)
     assert(medResid < 1.0)
   }
+
+  test("SparkEntry.entry returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
 }
