@@ -144,9 +144,9 @@ object Bench {
     val committed =
       if (basePath.isEmpty || basePath == "none") Map.empty[String, Double]
       else committedMedians(basePath, sfDir)
-    // Dev-only subset filter (comma-separated names), mirroring
-    // Verify's SPARK_GRAFT_VERIFY_ONLY: iterate on the heavy tail
-    // without paying the full sweep. Unset (the driver) = everything.
+    // Dev-only subset filter (comma-separated names), like Verify's
+    // query-name arguments: iterate on the heavy tail without paying
+    // the full sweep. Unset = everything.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // CHEAPEST-FIRST execution order (committed medians ascending,

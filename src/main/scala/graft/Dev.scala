@@ -44,10 +44,10 @@ object Dev {
       case f if f.startsWith("--") && it.hasNext => opts += f.drop(2) -> it.next()
       case n => names :+= n
     }
-    val unknown = (opts.keySet -- Set("sf", "reps", "plans", "suffix")).map("--" + _) ++
-      names.filterNot(SparkEntry.queries.contains)
+    val unknown = (opts.keySet -- Set("sf", "reps", "plans", "suffix")).map("--" + _)
     require(opts.contains("sf") && names.nonEmpty && unknown.isEmpty,
       s"${unknown.map(u => s"unknown $u\n").mkString}$Usage")
+    SparkEntry.requireKnown(names)
     val sf = opts("sf")
     val reps = opts.get("reps").map(_.toInt).getOrElse(3).max(0)
     val suffix = opts.get("suffix").map("_" + _).getOrElse("")

@@ -4,9 +4,8 @@ import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
-/** The ONE definition of "all-pairs join" shared by PlanGuardSpec's
-  * registry-wide sweep and the [[PlanSweep]] dev utility, so the two
-  * cannot drift.
+/** The ONE definition of "all-pairs join", used by PlanGuardSpec's
+  * registry-wide sweep.
   */
 object PlanAudit {
 
@@ -57,32 +56,4 @@ object PlanAudit {
     plan.collect {
       case b: BroadcastNestedLoopJoinExec if !isScalarBnlj(b) => b
     }
-}
-
-/** Dev utility: sweep every registry query's static physical plan and
-  * print the ones containing a BroadcastNestedLoopJoin or
-  * CartesianProduct — the input that pins PlanGuardSpec's registry-wide
-  * all-pairs allowlist.
-  */
-object PlanSweep {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = Sessions.local("4")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      try {
-        val plan = SparkEntry.queries(name)(spark, dir)
-          .queryExecution.executedPlan
-        val hits = PlanAudit.cartesians(plan).map(_ => "CARTESIAN") ++
-          plan.collect { case b: BroadcastNestedLoopJoinExec =>
-            s"BNLJ(scalar=${PlanAudit.isScalarBnlj(b)})"
-          }
-        if (hits.nonEmpty) println(s"SWEEP $name -> ${hits.mkString(", ")}")
-        else println(s"SWEEP $name -> clean")
-      } catch {
-        case e: Throwable => println(s"SWEEP $name -> ERR ${e.getClass.getSimpleName}: ${e.getMessage.take(120)}")
-      } finally graft.core.Caches.unpersistAll()
-    }
-    spark.stop()
-  }
 }

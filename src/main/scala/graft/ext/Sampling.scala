@@ -556,7 +556,7 @@ object Sampling {
     val tgt = perDocBucket.filter(col("__ref"))
       .groupBy("__b").agg(sum("__n").as("__tc"))
     // ONE groupless aggregate for both scalar totals (the 1-row
-    // scalar-join idiom PlanSweep.isScalarBnlj recognizes); an empty
+    // scalar-join idiom PlanAudit.isScalarBnlj recognizes); an empty
     // target leaves __nt NULL → logw NULL corpus-wide, mirrored by
     // the oracle's sum-over-empty
     val tots = perDocBucket.agg(sum("__n").as("__nr"),

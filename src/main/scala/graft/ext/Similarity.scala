@@ -183,7 +183,7 @@ object Similarity {
     * — the standard ANN shape at cluster scale, recall traded via
     * nlist/nprobe. Because the training trajectory is sequential IEEE
     * arithmetic, the ENTIRE chain including training is exact-hash
-    * oracled (SparkEntry.lloydCtes replays the fit in unrolled SQL).
+    * oracled (SimilarityQueries.lloydCtes replays the fit in unrolled SQL).
     * Output: query_id, vec_id, cosine, rank.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, id: String, vec: String,

@@ -81,7 +81,7 @@ final class MgSummary(val capacity: Int) {
   * exact group-by) is a sound first pass for exact heavy hitters:
   * sketch → ≤ capacity candidate keys → one conditional re-count of
   * candidates only → threshold filter gives the EXACT answer with
-  * bounded state end to end (see SparkEntry q_heavy_hitters).
+  * bounded state end to end (see TextQueries q_heavy_hitters).
   * Capacity is a construction-time literal; state is O(capacity)
   * on every executor regardless of stream length.
   */

@@ -477,8 +477,7 @@ class PlanGuardSpec extends SparkTestBase {
             s"$name plans a CartesianProduct — never acceptable:\n$plan")
           // PlanAudit.isScalarBnlj allows the scalar-join idiom (a
           // crossJoin against a 1-row groupless aggregate) ONLY when
-          // the aggregate is the BUILD side — one shared definition
-          // with the PlanSweep dev utility
+          // the aggregate is the BUILD side
           if (PlanAudit.allPairsLoops(plan).nonEmpty &&
             !allPairsAllowlist.contains(name)) Some(name)
           else None
