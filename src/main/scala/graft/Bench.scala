@@ -1,46 +1,6 @@
 package graft
-import java.lang.management.ManagementFactory
-import scala.jdk.CollectionConverters._
 
 object Bench {
-
-  /** Total JVM GC time in seconds across all collectors. */
-  private def gcSeconds: Double =
-    ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime.max(0L)).sum / 1e3
-
-  /** Aggregated task metrics for ONE measured sample, captured via a
-    * SparkListener. Purpose: when a sample runs far over its committed
-    * median in the driver environment (r13: two 75-100x spikes), the
-    * artifact should carry enough signal to ATTRIBUTE the spike — GC
-    * pause (task_gc/jvm_gc high), CPU starvation (wall >> task_run, or
-    * task_run >> task_cpu), or spill (spill_mb > 0) — instead of
-    * freezing a mysterious number. Listener delivery is async and
-    * there is no public flush, so these are best-effort diagnostics,
-    * not measurements; the wall number stays the measurement.
-    */
-  private final class TaskTraceListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private var runMs = 0L; private var cpuNs = 0L; private var gcMs = 0L
-    private var spillBytes = 0L; private var peakMs = 0L; private var nTasks = 0L
-    def reset(): Unit = synchronized {
-      runMs = 0; cpuNs = 0; gcMs = 0; spillBytes = 0; peakMs = 0; nTasks = 0
-    }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) synchronized {
-        runMs += m.executorRunTime; cpuNs += m.executorCpuTime
-        gcMs += m.jvmGCTime
-        spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
-        peakMs = math.max(peakMs, m.executorRunTime)
-        nTasks += 1
-      }
-    }
-    def snapshotJson(wall: Double, jvmGc: Double): String = synchronized {
-      f"""{"wall_sec":$wall%.2f,"jvm_gc_sec":$jvmGc%.2f,"task_run_sec":${runMs / 1e3}%.2f,"task_cpu_sec":${cpuNs / 1e9}%.2f,"task_gc_sec":${gcMs / 1e3}%.2f,"spill_mb":${spillBytes / 1048576.0}%.1f,"peak_task_sec":${peakMs / 1e3}%.2f,"n_tasks":$nTasks%d}"""
-    }
-  }
 
   /** Per-query medians from a committed BENCH_local.json — the
     * adjudication baseline. Missing/unparsable file, or a baseline
@@ -131,11 +91,15 @@ object Bench {
       math.max(1.0, mid)
     }
 
+  /** Usage: graft.Bench [query...] — with no query names every query
+    * runs; with names, only those (an unknown name fails before any
+    * query runs).
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    SparkEntry.requireKnown(args)
     val spark = Sessions.local()
-    val tracer = new TaskTraceListener
-    spark.sparkContext.addSparkListener(tracer)
+    val tracer = new QueryTrace(spark.sparkContext)
     // Adjudication baseline: the curated committed medians (the
     // default OUT path is a different file — promoting a run to
     // baseline is an explicit copy).
@@ -144,11 +108,6 @@ object Bench {
     val committed =
       if (basePath.isEmpty || basePath == "none") Map.empty[String, Double]
       else committedMedians(basePath, sfDir)
-    // Dev-only subset filter (comma-separated names), like Verify's
-    // query-name arguments: iterate on the heavy tail without paying
-    // the full sweep. Unset = everything.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // CHEAPEST-FIRST execution order (committed medians ascending,
     // unknown/new queries last, name as deterministic tiebreak): the
     // first queries in a fresh JVM absorb global JIT warmup — with
@@ -158,12 +117,10 @@ object Bench {
     // queries warm the JVM at ~no cost before anything heavy runs —
     // the cheap replacement for the full warmup pass this harness
     // dropped.
-    val queryMap = SparkEntry.queries
-      .filter(kv => only.forall(_.contains(kv._1)))
+    val names = SparkEntry.queries.keys
+      .filter(name => args.isEmpty || args.contains(name))
       .toSeq
-      .sortBy { case (name, _) =>
-        (committed.getOrElse(name, Double.MaxValue), name)
-      }
+      .sortBy(name => (committed.getOrElse(name, Double.MaxValue), name))
 
     // --- harness shape (r12 rc-124 + r13 46-skipped post-mortems) ---
     // Honest Force.force forcing stays — it IS the measurement. The
@@ -196,41 +153,35 @@ object Bench {
     //     its time-to-failure wall (real spent budget) and the
     //     artifact carries per-query "errors" so it can never read as
     //     a legitimate timing.
-    //  4. Any >5x first sample logs a "slow_trace" (task-metric
-    //     attribution) even when the re-measure clears it.
+    //  4. Every row carries its reported sample's QueryTrace ("trace");
+    //     a >5x first sample keeps its own ("slow_trace") as well.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val fastCut = sys.env.getOrElse("SPARK_GRAFT_BENCH_FASTCUT", "0.5").toDouble
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "600").toDouble
     var wallSpent = 0.0 // budget-charged wall: outlier samples capped at 5x committed
     var wallTrue = 0.0 // actual measured wall
 
-    final case class Sample(sec: Double, gc: Double, err: Option[String],
-      trace: String)
+    /** `gc` is the task GC time of the sample's trace. */
+    final case class Sample(sec: Double, err: Option[String], trace: Trace) {
+      def gc: Double = trace.phases.map(_.gcMs).sum / 1e3
+    }
 
-    val slowTraces = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val slowTraces = scala.collection.mutable.LinkedHashMap.empty[String, Trace]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
-    def sampleOnce(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) =>
-          org.apache.spark.sql.DataFrame): Sample = {
-      tracer.reset()
-      val g0 = gcSeconds
+    def sampleOnce(name: String): Sample = {
       val t0 = System.nanoTime()
-      val err =
-        try { Force.force(fn(spark, sfDir)); None }
-        catch { case e: Throwable =>
-          Some((e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage)).replaceAll("[\"\\\\\n\r\t]", " ")
-            .take(200))
-        }
-        finally graft.core.Caches.unpersistAll()
+      val trace = tracer.run(SparkEntry.queries(name)(spark, sfDir))
+      graft.core.Caches.unpersistAll()
       val dt = (System.nanoTime() - t0) / 1e9
-      val gcd = gcSeconds - g0
+      val err = trace.error.map(e => (e.getClass.getSimpleName + ": " +
+        String.valueOf(e.getMessage)).replaceAll("[\"\\\\\n\r\t]", " ")
+        .take(200))
       wallTrue += dt
       wallSpent += committed.get(name)
         .fold(dt)(c => math.min(dt, math.max(c * 5, 0.5)))
       err.foreach(m => errors.getOrElseUpdate(name, m))
-      Sample(dt, gcd, err, tracer.snapshotJson(dt, gcd))
+      Sample(dt, err, trace)
     }
     // >5x committed AND past an absolute floor that SCALES with the
     // committed value (clamped to [0.1, 0.5] s) so sub-second noise
@@ -257,7 +208,7 @@ object Bench {
     // pacing state: committed cost of the queries measured so far (the
     // denominator of the observed-inflation estimate) and of the whole
     // selected sweep
-    val committedTotal = queryMap.flatMap(kv => committed.get(kv._1)).sum
+    val committedTotal = names.flatMap(committed.get).sum
     var committedDone = 0.0
     // capped charge of each query's FIRST sample only — the pacing
     // inflation numerator (see allowSecondSample)
@@ -265,12 +216,9 @@ object Bench {
     // (first, remeasured) for every adjudicated query — immediate or
     // post-sweep — so the artifact always records both numbers.
     val adjudicated = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val queryLookup = queryMap.toMap
 
-    def measure(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) =>
-          org.apache.spark.sql.DataFrame, nSamples: Int): Seq[Sample] = {
-      val first = sampleOnce(name, fn)
+    def measure(name: String, nSamples: Int): Seq[Sample] = {
+      val first = sampleOnce(name)
       committedDone += committed.getOrElse(name, 0.0)
       firstSampleCharged += committed.get(name)
         .fold(first.sec)(c => math.min(first.sec, math.max(c * 5, 0.5)))
@@ -279,7 +227,7 @@ object Bench {
         slowTraces(name) = first.trace
         val exempt = first.sec > budgetSec * 0.1
         if (wallSpent <= budgetSec * 1.3 || exempt) {
-          val re = sampleOnce(name, fn)
+          val re = sampleOnce(name)
           adjudicated(name) = (first.sec, re.sec)
           samples += re
         }
@@ -297,14 +245,14 @@ object Bench {
               committedTotal, chargePer * extraSamples, budgetSec))
           samples.size
         else math.max(samples.size, nSamples)
-      while (samples.size < n) samples += sampleOnce(name, fn)
+      while (samples.size < n) samples += sampleOnce(name)
       samples.toSeq
     }
 
-    val firstPass = queryMap.flatMap { case (name, fn) =>
+    val firstPass = names.flatMap { name =>
       if (wallSpent > budgetSec * 1.3) { skipped += name; None }
       else {
-        val samples = measure(name, fn, reps)
+        val samples = measure(name, reps)
         sampleCounts(name) = samples.size
         Some(name -> statistic(samples))
       }
@@ -336,7 +284,7 @@ object Bench {
     val remeasured = suspects.flatMap { case (name, s) =>
       if (wallSpent > budgetSec * 1.3) None
       else {
-        val re = sampleOnce(name, queryLookup(name))
+        val re = sampleOnce(name)
         adjudicated(name) = (s.sec, re.sec)
         Some(name -> re)
       }
@@ -364,11 +312,21 @@ object Bench {
       .mkString("{", ",", "}")
     val errJson = errors.map { case (k, m) => "\"" + k + "\":\"" + m + "\"" }
       .mkString("{", ",", "}")
-    val traceJson = slowTraces.map { case (k, t) => "\"" + k + "\":" + t }
+    val traceJson = results.map { case (k, s) => "\"" + k + "\":" + s.trace.json }
+      .mkString("{", ",", "}")
+    val slowTraceJson = slowTraces.map { case (k, t) => "\"" + k + "\":" + t.json }
       .mkString("{", ",", "}")
     val skippedJson = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2.sec).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_sec":$gc,"n_samples":$ns,"stat_rule":"n=1 single sample; n even min; n odd median; errored samples outranked by clean ones; an adjudicated row (see adjudicated) reports min(statistic, remeasure) and its remeasure counts into n_samples","adjudicated":$adjJson,"errors":$errJson,"slow_trace":$traceJson,"reps":$reps,"truncated":${skipped.nonEmpty},"skipped":$skippedJson,"wall_sec":${f"$wallTrue%.2f"},"wall_charged_sec":${f"$wallSpent%.2f"},"env_inflation":${f"$infl%.3f"},"sf":"$sfDir"}"""
+    // per-family subtotals, in registry order; the total is their sum
+    val familyOf = SparkEntry.defs.map(d => d.name -> d.family).toMap
+    val familySec = SparkEntry.defs.map(_.family).distinct.flatMap { f =>
+      val secs = results.collect { case (k, s) if familyOf(k) == f => s.sec }
+      if (secs.isEmpty) None else Some(f -> secs.sum)
+    }
+    val familyJson = familySec.map { case (f, sec) => "\"" + f + "\":" + sec }
+      .mkString("{", ",", "}")
+    val total = familySec.map(_._2).sum
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_sec":$gc,"n_samples":$ns,"stat_rule":"n=1 single sample; n even min; n odd median; errored samples outranked by clean ones; an adjudicated row (see adjudicated) reports min(statistic, remeasure) and its remeasure counts into n_samples","adjudicated":$adjJson,"errors":$errJson,"family_sec":$familyJson,"trace":$traceJson,"slow_trace":$slowTraceJson,"reps":$reps,"truncated":${skipped.nonEmpty},"skipped":$skippedJson,"wall_sec":${f"$wallTrue%.2f"},"wall_charged_sec":${f"$wallSpent%.2f"},"env_inflation":${f"$infl%.3f"},"sf":"$sfDir"}"""
     println(json)
     // Self-contained artifact: the driver captures only a stdout tail,
     // which truncated the round-5 record to 22/58 medians. Writing the
@@ -389,8 +347,8 @@ object Bench {
     // queries the full JSON line above overflows it and rounds 5/7
     // lost their parsed totals. The LAST line is therefore a compact
     // summary guaranteed to fit the tail: total, count, slowest 5,
-    // (capped at 5, slowest first) the adjudicated outliers, error
-    // count, and the slow_trace for the single worst adjudicated row.
+    // (capped at 5, slowest first) the adjudicated outliers and the
+    // error count. Traces are in the full JSON only: one is ~1 kB.
     val slowest = results.sortBy(-_._2.sec).take(5)
       .map { case (k, s) => "\"" + k + "\":" + f"${s.sec}%.2f" }
       .mkString("{", ",", "}")
@@ -399,11 +357,7 @@ object Bench {
         "\"" + k + "\":{\"first\":" + f"$first%.2f" +
           ",\"remeasured\":" + f"$rsec%.2f" + "}"
       }.mkString("{", ",", "}")
-    val worstTrace = adjudicated.toSeq.sortBy { case (_, (first, _)) => -first }
-      .headOption.flatMap { case (k, _) => slowTraces.get(k).map(t =>
-        "\"" + k + "\":" + t) }
-      .map(e => "{" + e + "}").getOrElse("{}")
     val gcTotal = results.map(_._2.gc).sum
-    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_queries":${results.size}%d,"reps":$reps%d,"gc_sec_total":$gcTotal%.2f,"wall_sec":$wallTrue%.2f,"wall_charged_sec":$wallSpent%.2f,"env_inflation":$infl%.3f,"truncated":${skipped.nonEmpty}%s,"n_skipped":${skipped.size}%d,"n_adjudicated":${adjudicated.size}%d,"n_errors":${errors.size}%d,"adjudicated":$adjTop%s,"slowest":$slowest%s,"slow_trace":$worstTrace%s,"sf":"$sfDir%s"}""")
+    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_queries":${results.size}%d,"reps":$reps%d,"gc_sec_total":$gcTotal%.2f,"wall_sec":$wallTrue%.2f,"wall_charged_sec":$wallSpent%.2f,"env_inflation":$infl%.3f,"truncated":${skipped.nonEmpty}%s,"n_skipped":${skipped.size}%d,"n_adjudicated":${adjudicated.size}%d,"n_errors":${errors.size}%d,"adjudicated":$adjTop%s,"slowest":$slowest%s,"sf":"$sfDir%s"}""")
   }
 }

@@ -14,8 +14,8 @@ import graft.operators.AsOf
   * key cardinality and row volume widen — the direct test of the
   * "one shuffle on the user key, embarrassingly parallel per key"
   * scale claim (same methodology as GoldenBench's station axis).
-  * Median of 3 per cell after one warmup pass. Output: one line per
-  * (op, N) with rows/s on the REPLICATED input size.
+  * Median of 3 forced runs per cell after one warmup pass. Output: one
+  * line per (op, N) with rows/s on the REPLICATED input size.
   */
 object EventsScaleBench {
   def main(args: Array[String]): Unit = {
@@ -32,12 +32,12 @@ object EventsScaleBench {
         .drop("__r")
     }
 
-    def ops(ev: DataFrame): Seq[(String, () => Long)] = Seq(
+    def ops(ev: DataFrame): Seq[(String, () => DataFrame)] = Seq(
       "sessionize" -> (() =>
-        Sessionize.sessionize(ev, "user_id", "ts", gap).count()),
+        Sessionize.sessionize(ev, "user_id", "ts", gap)),
       "funnel" -> (() =>
         Sessionize.funnel(ev, "user_id", "ts", "event_type",
-          Seq("view", "click", "purchase")).count()),
+          Seq("view", "click", "purchase"))),
       "asof" -> (() => {
         val purchases = ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), unix_micros(col("ts")).as("purchase_us"))
@@ -46,29 +46,30 @@ object EventsScaleBench {
             col("value"))
           .groupBy("user_id", "view_us").agg(max("value").as("view_value"))
         AsOf.asofJoin(purchases, views, "user_id", "purchase_us", "view_us",
-          Seq("view_value")).count()
+          Seq("view_value"))
       }),
       "compact" -> (() =>
         Sessionize.compactLatest(
           ev.select(col("user_id"), col("event_type"),
             unix_micros(col("ts")).as("ts_us"), col("event_id")),
-          Seq("user_id", "event_type"), "ts_us", "event_id").count()),
+          Seq("user_id", "event_type"), "ts_us", "event_id")),
       "scd2" -> (() =>
         Sessionize.scdIntervals(
           ev.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
             col("event_id"), col("value")),
-          Seq("user_id"), "ts_us", "event_id").count()),
+          Seq("user_id"), "ts_us", "event_id")),
       // hop windows key on TIME, not user, so replication widens rows
       // per (window, type) cell rather than cell count — the map-side
       // combine must absorb the extra volume for wall time to stay flat
       "hop" -> (() =>
         Sessionize.hoppingCounts(ev, "ts", "2 hours", "1 hour",
-          Seq("event_type")).count()))
+          Seq("event_type"))))
 
     for (n <- Seq(1, 8, 32)) {
       val ev = replicated(n)
       val inRows = ev.count()
-      ops(ev).foreach { case (name, run) =>
+      ops(ev).foreach { case (name, build) =>
+        val run = () => Force.force(build())
         run() // warmup (codegen + scan cache)
         val times = (1 to 3).map { _ =>
           val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9

@@ -27,10 +27,6 @@ object OpsScaleBench {
     val spark = Sessions.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    // stage-level shuffle-write accumulator for the shuffle-volume
-    // rows: the listener sums bytesWritten per completed stage; reads
-    // go through ListenerFlush.flush (drain the async bus) so the
-    // counter is exact per measured run, never racing delivery.
     // Honest forcing for every timed row: execute the operator's own
     // physical plan (all columns computed) instead of count(), which
     // Catalyst optimizes around — see graft.Force for the round-12
@@ -41,21 +37,7 @@ object OpsScaleBench {
       def forcedRows(): Long = Force.force(df)
     }
 
-    val shuffleWritten = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleWritten.addAndGet(
-            e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
-    def measuredShuffleMb(run: () => Long): Double = {
-      org.apache.spark.graftbridge.ListenerFlush.flush(spark.sparkContext)
-      val before = shuffleWritten.get()
-      run()
-      org.apache.spark.graftbridge.ListenerFlush.flush(spark.sparkContext)
-      (shuffleWritten.get() - before) / 1e6
-    }
+    val tracer = new QueryTrace(spark.sparkContext)
 
     // dev-only row filter (comma-separated op names): re-measure one
     // axis without paying the full ~30 min sweep. Unset runs all.
@@ -72,25 +54,26 @@ object OpsScaleBench {
       }.sorted.apply(1)
     }
 
-    def bench(name: String, n: Int, inRows: Long)(run: () => Long): Unit =
+    def bench(name: String, n: Int, inRows: Long, extra: => String = "")(
+        run: () => Long): Unit =
       if (selected(name)) {
         val med = timedMedian(run)
         println(f"OPSCALE op=$name%-13s n=$n%2d rows=$inRows%9d " +
-          f"median=$med%7.3f s thru=${inRows / med / 1e6}%6.2f Mrows/s")
+          f"median=$med%7.3f s thru=${inRows / med / 1e6}%6.2f Mrows/s" + extra)
       }
 
-    /** bench + exact shuffle-write bytes of one extra measured pass
+    /** bench + exact shuffle-write bytes of one extra traced pass
       * after the timing passes — shuffle volume is deterministic per
-      * plan, unlike wall time.
+      * plan, unlike wall time. Every pass ends with
+      * `Caches.unpersistAll()`.
       */
-    def benchShuffle(name: String, n: Int, inRows: Long)(run: () => Long): Unit =
-      if (selected(name)) {
-        val med = timedMedian(run)
-        val mb = measuredShuffleMb(run)
-        println(f"OPSCALE op=$name%-13s n=$n%2d rows=$inRows%9d " +
-          f"median=$med%7.3f s thru=${inRows / med / 1e6}%6.2f Mrows/s " +
-          f"shuffle=$mb%9.3f MB")
-      }
+    def benchShuffle(name: String, n: Int, inRows: Long)(build: () => DataFrame): Unit =
+      bench(name, n, inRows, {
+        val trace = tracer.run(build())
+        graft.core.Caches.unpersistAll()
+        trace.error.foreach(throw _)
+        f" shuffle=${trace.phases.map(_.shuffleWriteBytes).sum / 1e6}%9.3f MB"
+      })(() => try build().forcedRows() finally graft.core.Caches.unpersistAll())
 
     /** n× replication with vocab-disjoint suffixing from replica
       * `suffixFrom` on: every word of a suffixed replica gets a
@@ -233,12 +216,9 @@ object OpsScaleBench {
       // shuffle=MB is the exact per-run listener-measured write
       // volume (the decontamination evidentiary standard): linear
       // bytes, not just linear wall, is the cluster-relevant fact.
-      benchShuffle("substr_spans", n, nDocs * n) { () =>
-        val c = graft.ext.Dedup.substringSpans(docsV, "doc_id", "text",
-          minLen = 8, maxDf = 20).forcedRows()
-        graft.core.Caches.unpersistAll()
-        c
-      }
+      benchShuffle("substr_spans", n, nDocs * n)(() =>
+        graft.ext.Dedup.substringSpans(docsV, "doc_id", "text",
+          minLen = 8, maxDf = 20))
 
       // n-gram novelty on the corpus axis (vocab-disjoint replicas so
       // per-shingle df stays flat): one shingle pass + one df
@@ -256,7 +236,7 @@ object OpsScaleBench {
       // linearly in documents (the one exchange is the id groupBy).
       benchShuffle("winnow", n, nDocs * n)(() =>
         TextStats.winnowFingerprints(docsV, "doc_id", "text",
-          k = 4, w = 5).forcedRows())
+          k = 4, w = 5))
 
       // capped bm25 on the SAME harsh axis as the bm25 row: with
       // dfCapFrac=0.5 only the rare tail of the vocabulary generates
@@ -367,7 +347,7 @@ object OpsScaleBench {
       // (cell-grid-sized) while the corpus widens 32x; wall tracks
       // the scan linearly.
       benchShuffle("cms_build", n, nDocs * n)(() =>
-        TextStats.cmSketch(docs, "text", depth = 4, width = 256).forcedRows())
+        TextStats.cmSketch(docs, "text", depth = 4, width = 256))
 
       // priority sampling: TakeOrderedAndProject keeps a (k+1)-heap
       // per partition — no global sort, result size fixed at k, so
@@ -375,7 +355,7 @@ object OpsScaleBench {
       // sized.
       benchShuffle("prio_sample", n, nDocs * n)(() =>
         graft.ext.Sampling.prioritySample(docs, "doc_id",
-          length(col("text")), k = 25).forcedRows())
+          length(col("text")), k = 25))
 
       // end-to-end curation composite on vocab-disjoint replicas
       // (families never cross replicas — matched-pair volume linear):
@@ -428,14 +408,11 @@ object OpsScaleBench {
       // shuffle dominated by the per-(doc,bucket) count table — the
       // linear-in-corpus, constant-in-model signature. Top-k sampling
       // adds only a TakeOrderedAndProject heap on the weights.
-      benchShuffle("dsir", n, nDocs * n) { () =>
-        val c = graft.ext.Sampling.dsirSample(
+      benchShuffle("dsir", n, nDocs * n)(() =>
+        graft.ext.Sampling.dsirSample(
           graft.ext.Sampling.dsirWeights(docsS, "doc_id", "text",
             refFilter = col("source") === "src0", buckets = 4096),
-          "doc_id", k = 30).forcedRows()
-        graft.core.Caches.unpersistAll()
-        c
-      }
+          "doc_id", k = 30))
 
       // semantic decontamination: the corpus axis widens n× while
       // the broadcast bench set stays fixed — wall should be linear
@@ -464,13 +441,10 @@ object OpsScaleBench {
       val benchDocs = docs0.filter(col("doc_id") % 29 === 0)
       benchShuffle("decont_plain", n, nDocs * n)(() =>
         graft.ext.Dedup.decontaminate(trainDocs, benchDocs,
-          "doc_id", "text", k = 3, minShared = 5).forcedRows())
-      benchShuffle("decont_bloom", n, nDocs * n) { () =>
-        val c = graft.ext.Dedup.decontaminateBloom(trainDocs, benchDocs,
-          "doc_id", "text", k = 3, minShared = 5).forcedRows()
-        graft.core.Caches.unpersistAll()
-        c
-      }
+          "doc_id", "text", k = 3, minShared = 5))
+      benchShuffle("decont_bloom", n, nDocs * n)(() =>
+        graft.ext.Dedup.decontaminateBloom(trainDocs, benchDocs,
+          "doc_id", "text", k = 3, minShared = 5))
 
       // SemDeDup embedding-cluster dedup on the corpus axis: replicas
       // are ROTATED copies (a rotation of iid-random dims is
@@ -518,7 +492,7 @@ object OpsScaleBench {
       // still).
       benchShuffle("cluster_sample", n, nVecs * n)(() =>
         Similarity.clusterBalancedSample(embRot, "vec_id", "embedding",
-          nSeeds = 16 * n, k = 10).forcedRows())
+          nSeeds = 16 * n, k = 10))
 
       // IVF serving path with nlist ∝ n (the cluster contract: cell
       // count grows with the corpus to keep per-cell candidate volume
@@ -811,18 +785,12 @@ object OpsScaleBench {
         val prevBjt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try {
-          benchShuffle("simhash_hot", n, skewRows) { () =>
-            val c = graft.ext.Dedup.simHashPairs(skewed, "doc_id", "text",
-              maxDist = 3).forcedRows()
-            graft.core.Caches.unpersistAll()
-            c
-          }
-          benchShuffle("simhash_cap", n, skewRows) { () =>
-            val c = graft.ext.Dedup.simHashPairsCapped(skewed, "doc_id",
-              "text", maxDist = 3, maxChunkDf = 300L).forcedRows()
-            graft.core.Caches.unpersistAll()
-            c
-          }
+          benchShuffle("simhash_hot", n, skewRows)(() =>
+            graft.ext.Dedup.simHashPairs(skewed, "doc_id", "text",
+              maxDist = 3))
+          benchShuffle("simhash_cap", n, skewRows)(() =>
+            graft.ext.Dedup.simHashPairsCapped(skewed, "doc_id",
+              "text", maxDist = 3, maxChunkDf = 300L))
         } finally
           spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBjt)
       }
