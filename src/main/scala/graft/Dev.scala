@@ -9,13 +9,18 @@ import org.apache.spark.sql.execution.FormattedMode
 /** Dev loupe for named registry queries, next to [[Bench]]'s sweep;
   * not part of the engine surface.
   *
-  * Per query: one warm-up run (JIT / codegen-cache churn dominates a
-  * cold run), then `--reps` reps. Each rep runs under [[QueryTrace]]
-  * and prints its [[Trace]] as JSON, the same fields Bench writes per
-  * row: build / plan / exec wall, each phase's jobs, stages, tasks,
-  * time in jobs, task run / CPU / GC, spill and shuffle bytes, and the
-  * plan's exchange count. The last line per query is the median rep
-  * wall (build + plan + exec).
+  * Per query: one warm-up run, then `--reps` reps. A cold run pays JIT
+  * warm-up and compiles every generated class the query needs; the
+  * reps find those classes in Spark's codegen cache, which `Sessions`
+  * sizes to hold them, so a rep's `codegen_compiles` is near 0 unless
+  * the query's plan changes between runs (the warm-up line prints its
+  * own count to compare with). Each rep runs under
+  * [[QueryTrace]] and prints its [[Trace]] as JSON, the same fields
+  * Bench writes per row: build / plan / exec wall, each phase's jobs,
+  * stages, tasks, time in jobs, driver time outside them, codegen
+  * compiles and seconds, task run / CPU / GC, spill and shuffle bytes,
+  * and the plan's exchange count. The last line per query is the
+  * median rep wall (build + plan + exec).
   *
   * `--plans DIR` writes each query's formatted physical plan, as built
   * before execution, to `DIR/<query>[_<suffix>].txt`; with `--reps 0`
@@ -51,6 +56,7 @@ object Dev {
     names.foreach { n =>
       try {
         val tw = System.nanoTime()
+        val cw = QueryTrace.compiles
         val warm = SparkEntry.queries(n)(spark, sf)
         opts.get("plans").foreach { d =>
           Files.writeString(Paths.get(d, s"$n$suffix.txt"),
@@ -59,7 +65,8 @@ object Dev {
         }
         if (reps > 0) {
           Force.force(warm)
-          println(f"[dev] $n%-24s warm-up ${(System.nanoTime() - tw) / 1e9}%6.2f s")
+          println(f"[dev] $n%-24s warm-up ${(System.nanoTime() - tw) / 1e9}%6.2f s" +
+            s" codegen_compiles ${QueryTrace.compiles - cw}")
         }
         graft.core.Caches.unpersistAll(blocking = true)
         val walls = (1 to reps).map { r =>

@@ -4,17 +4,25 @@ import scala.collection.mutable
 
 import org.apache.spark.SparkContext
 import org.apache.spark.graftbridge.{JobTags, ListenerFlush}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** What one phase of a traced query cost: its wall, and the scheduler
   * work of the jobs it started; `peakMs` is the longest task's run.
+  *
+  * `codegenCompiles` and `codegenNs` are the classes Spark generated
+  * and compiled during the phase, and the time it took, read from
+  * Spark's JVM-wide codegen counters: runs traced at the same time see
+  * each other's compiles.
   */
 final class Phase {
   var wallSec = 0.0
   var jobs = 0; var stages = 0; var tasks = 0
   var runMs = 0L; var cpuNs = 0L; var gcMs = 0L; var peakMs = 0L
   var spillBytes = 0L; var shuffleWriteBytes = 0L
+  var codegenCompiles = 0L; var codegenNs = 0L
   private[graft] val jobSpans = mutable.ArrayBuffer.empty[(Long, Long)]
 
   /** The union of the phase's job intervals: scheduled work, as opposed
@@ -30,8 +38,13 @@ final class Phase {
     inJobs / 1e3
   }
 
+  /** Wall outside the phase's jobs: analysis, planning, codegen and
+    * driver glue between jobs.
+    */
+  def driverSec: Double = math.max(0.0, wallSec - inJobsSec)
+
   def json: String =
-    f"""{"wall_sec":$wallSec%.3f,"jobs":$jobs%d,"stages":$stages%d,"tasks":$tasks%d,"in_jobs_sec":$inJobsSec%.3f,"task_run_sec":${runMs / 1e3}%.3f,"task_cpu_sec":${cpuNs / 1e9}%.3f,"task_gc_sec":${gcMs / 1e3}%.3f,"spill_mb":${spillBytes / 1048576.0}%.1f,"shuffle_write_mb":${shuffleWriteBytes / 1048576.0}%.3f,"peak_task_sec":${peakMs / 1e3}%.3f}"""
+    f"""{"wall_sec":$wallSec%.3f,"jobs":$jobs%d,"stages":$stages%d,"tasks":$tasks%d,"in_jobs_sec":$inJobsSec%.3f,"driver_sec":$driverSec%.3f,"codegen_compiles":$codegenCompiles%d,"codegen_sec":${codegenNs / 1e9}%.3f,"task_run_sec":${runMs / 1e3}%.3f,"task_cpu_sec":${cpuNs / 1e9}%.3f,"task_gc_sec":${gcMs / 1e3}%.3f,"spill_mb":${spillBytes / 1048576.0}%.1f,"shuffle_write_mb":${shuffleWriteBytes / 1048576.0}%.3f,"peak_task_sec":${peakMs / 1e3}%.3f}"""
 }
 
 /** One traced query run: BUILD (the generator call, with the driver
@@ -101,10 +114,13 @@ final class QueryTrace(sc: SparkContext) extends SparkListener {
     val (b, p, x) = (new Phase, new Phase, new Phase)
     def phase[T](into: Phase)(body: => T): T = {
       synchronized { current(tag) = into }
+      val (c0, n0) = (QueryTrace.compiles, QueryTrace.compileNs)
       val t0 = System.nanoTime()
       try body
       finally {
         into.wallSec = (System.nanoTime() - t0) / 1e9
+        into.codegenCompiles = QueryTrace.compiles - c0
+        into.codegenNs = QueryTrace.compileNs - n0
         ListenerFlush.flush(sc)
       }
     }
@@ -132,4 +148,13 @@ final class QueryTrace(sc: SparkContext) extends SparkListener {
   }
 
   sc.addSparkListener(this)
+}
+
+object QueryTrace {
+
+  /** Classes compiled by Spark's code generator in this JVM so far. */
+  def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Nanoseconds spent compiling them. */
+  def compileNs: Long = CodeGenerator.compileTime
 }

@@ -67,6 +67,18 @@ object Sessions {
       // deployment restores the 1m default with --conf (or at runtime:
       // it is a runtime SQL conf).
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k",
+      // Spark's generated-class cache is one JVM-wide LRU, keyed by
+      // class body and class loader (the driver's and the executor's).
+      // One QC pass (Pipeline.run + write) needs about 330 entries,
+      // about 300 of them for 218-236 distinct bodies; at the default
+      // of 100 the cache thrashes, and every repeated pass in one
+      // session recompiled about 300 classes (CodegenMetrics: 301-305
+      // compiles per pass, 0-36 at 1000; perfbench qc_stations wall
+      // 8.2 -> 5.8 s, registry_sweep 8.5 -> 5.9 s on 4 cores). 1000
+      // holds about two sessions' worth of that working set. Spark
+      // reads it once, at the JVM's first code generation, so the
+      // first session built in a process fixes it for the process.
+      "spark.sql.codegen.cache.maxEntries" -> "1000",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.ui.enabled" -> "false")

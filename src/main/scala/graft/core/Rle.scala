@@ -35,10 +35,14 @@ object Rle {
     */
   def withMarkers(df: DataFrame, spec: SeriesSpec, flag: Column): DataFrame = {
     val w = SeriesWindows.ordered(spec)
-    val wPart = Window.partitionBy(spec.keyCols: _*)
-    val d = df.withColumn("__xb", flag)
-      .withColumn("__rn", row_number().over(w) - 1)
-      .withColumn("__n", count(lit(1)).over(wPart))
+    // the series length over w's own partitioning and order, so the
+    // flag, position and length share one Window operator and one sort
+    val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    // three projections: a window function cannot take another as its
+    // input, and the flag may hold one, the markers compare the flag's
+    // neighbours, and the marker id counts markers
+    val d = Cols.set(df, "__xb" -> flag, "__rn" -> (row_number().over(w) - 1),
+      "__n" -> count(lit(1)).over(whole))
     val cCur = when(col("__rn") === 0, lit(true))
       .otherwise(col("__xb") =!= lag(col("__xb"), 1).over(w))
     val cNext = when(col("__rn") === col("__n") - 1, lit(true))
@@ -64,14 +68,11 @@ object Rle {
   def runsFromMarked(marked: DataFrame, spec: SeriesSpec,
       carry: Seq[String] = Seq.empty): DataFrame = {
     val wm = SeriesWindows.ordered(spec) // applied over marker rows only
-    val markers = marked.filter(col("__marker"))
-    val withNext = carry.foldLeft(
-      markers
-        .withColumn("next_rn", lead(col("__rn"), 1).over(wm))
-        .withColumn("__next_ts", lead(spec.tsCol, 1).over(wm))) {
-      (acc, c) => acc.withColumn(s"__next_$c", lead(col(c), 1).over(wm))
-    }
-    withNext.filter(col("next_rn").isNotNull)
-      .withColumn("run_len", col("next_rn") - col("__rn"))
+    val nextRn = lead(col("__rn"), 1).over(wm)
+    val next = Seq("next_rn" -> nextRn, "__next_ts" -> lead(spec.tsCol, 1).over(wm)) ++
+      carry.map(c => s"__next_$c" -> lead(col(c), 1).over(wm)) :+
+      ("run_len" -> (nextRn - col("__rn")))
+    Cols.set(marked.filter(col("__marker")), next: _*)
+      .filter(col("next_rn").isNotNull)
   }
 }

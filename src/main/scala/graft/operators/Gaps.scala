@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.{SeriesSpec, SeriesWindows, TimeIndex}
+import graft.core.{Cols, SeriesSpec, SeriesWindows, TimeIndex}
 
 /** Gap classification (reference `classify_gaps`,
   * scripts/ufz_water_qc_pipeline.py:179-189, applied at :673-674).
@@ -20,8 +20,8 @@ object Gaps {
   def classify(df: DataFrame, spec: SeriesSpec, gapHours: Double = 2.0): DataFrame = {
     val thr = TimeIndex.hoursToUs(gapHours)
     val d = if (df.columns.contains("delta_us")) df else TimeIndex.withDeltaUs(df, spec)
-    d.withColumn("is_gap", coalesce(col("delta_us") > thr, lit(false)))
-      .withColumn("gap_us", when(col("is_gap"), col("delta_us")))
+    val isGap = coalesce(col("delta_us") > thr, lit(false))
+    Cols.set(d, "is_gap" -> isGap, "gap_us" -> when(isGap, col("delta_us")))
   }
 
   /** Mask the first post-gap sample's value to NULL (x[gaps]=nan). */

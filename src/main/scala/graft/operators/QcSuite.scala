@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.SeriesSpec
+import graft.core.{Cols, SeriesSpec}
 
 /** The 9-check QC flag suite (reference `apply_saqc_suite` fallback
   * branch, scripts/ufz_water_qc_pipeline.py:564-589; the fallbacks ARE
@@ -34,20 +34,22 @@ object QcSuite {
 
   /** Adds the nine flag columns plus `qc_flag` (0/255). Input needs
     * `delta_us` (for isolated); `stepDf` is (keys*, step_us).
+    * Consecutive flags are added in one projection each; the run masks
+    * and the robust z-score build their own.
     */
   def apply(df: DataFrame, spec: SeriesSpec, stepDf: DataFrame,
       cfg: QcConfig): DataFrame = {
-    var d = RollingStats.rangeFlag(df, spec, cfg.rangeMin, cfg.rangeMax)
-    d = RollingStats.missingFlag(d, spec)
+    var d = Cols.set(df,
+      "flag_range" -> RollingStats.rangeFlag(spec, cfg.rangeMin, cfg.rangeMax),
+      "flag_missing" -> RollingStats.missingFlag(spec))
     d = Runs.flatMask(d, spec, cfg.flatHours, absTol = 0.0, out = "flag_plateau")
-    d = d.withColumn("flag_constants", col("flag_plateau"))
-    d = RollingStats.varianceFlag(d, spec, cfg.kVariance, cfg.varianceThresh)
+    d = Cols.set(d, "flag_constants" -> col("flag_plateau"),
+      "flag_variance" -> RollingStats.varianceFlag(spec, cfg.kVariance, cfg.varianceThresh))
     d = RollingStats.robustZFlag(d, spec, cfg.kZscore, cfg.zThresh)
-    d = d.withColumn("flag_unilof", col("flag_zscore"))
-    d = RollingStats.jumpFlag(d, spec, cfg.jumpThresh)
-    d = Runs.isolatedMask(d, spec, stepDf, cfg.isolatedGapHours, cfg.isolatedGroupUs)
-      .withColumnRenamed("isolated", "flag_isolated")
-    d.withColumn("qc_flag",
-      when(FlagCols.map(col).reduce(_ || _), 255).otherwise(0))
+    d = Cols.set(d, "flag_unilof" -> col("flag_zscore"),
+      "flag_jumps" -> RollingStats.jumpFlag(spec, cfg.jumpThresh))
+    Runs.isolatedMask(d, spec, stepDf, cfg.isolatedGapHours, cfg.isolatedGroupUs,
+      out = "flag_isolated")
+      .withColumn("qc_flag", when(FlagCols.map(col).reduce(_ || _), 255).otherwise(0))
   }
 }

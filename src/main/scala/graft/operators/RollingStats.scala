@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.{SeriesSpec, SeriesWindows}
+import graft.core.{Cols, SeriesSpec, SeriesWindows}
 
 /** Rolling-frame QC statistics (reference fallback flags,
   * scripts/ufz_water_qc_pipeline.py:399-457). All frames are pandas-
@@ -17,11 +17,10 @@ object RollingStats {
     * variance (pandas .var() ddof=1) ≤ thresh, min_periods
     * max(3, k/3); NULL → false.
     */
-  def varianceFlag(df: DataFrame, spec: SeriesSpec, k: Int,
-      thresh: Double = 1e-12, out: String = "flag_variance"): DataFrame = {
+  def varianceFlag(spec: SeriesSpec, k: Int, thresh: Double): Column = {
     val w = SeriesWindows.centered(spec, k)
     val v = SeriesWindows.rollingVarSamp(spec.valueCol, w, math.max(3, k / 3))
-    df.withColumn(out, coalesce(v <= thresh, lit(false)))
+    coalesce(v <= thresh, lit(false))
   }
 
   /** `_fallback_flag_zscore` (:415-422): centered k-row rolling median
@@ -35,6 +34,8 @@ object RollingStats {
       keepStats: Boolean = false): DataFrame = {
     val w = SeriesWindows.centered(spec, k)
     val minp = math.max(5, k / 3)
+    // three projections: the MAD is a window over the median window's
+    // output, and the flag reads the MAD
     val withMed = df.withColumn("__med",
       SeriesWindows.rollingMedian(spec.valueCol, w, minp))
     val absDev = abs(spec.valueCol - col("__med"))
@@ -42,35 +43,33 @@ object RollingStats {
       SeriesWindows.rollingMedian(absDev, w, minp))
     val z = lit(0.6745) * (spec.valueCol - col("__med")) /
       when(col("__mad") =!= 0.0, col("__mad"))
-    val res = withMad.withColumn(out, coalesce(abs(z) >= thresh, lit(false)))
-    if (keepStats) res.withColumnRenamed("__med", "med").withColumnRenamed("__mad", "mad")
-    else res.drop("__med", "__mad")
+    val flag = out -> coalesce(abs(z) >= thresh, lit(false))
+    if (keepStats)
+      Cols.project(withMad, Seq("__med", "__mad"),
+        "med" -> col("__med"), "mad" -> col("__mad"), flag)
+    else Cols.project(withMad, Seq("__med", "__mad"), flag)
   }
 
   /** `_fallback_flag_jumps` (:424-428): |x − lag(x)| ≥ thresh. */
-  def jumpFlag(df: DataFrame, spec: SeriesSpec, thresh: Double = 5.0,
-      out: String = "flag_jumps"): DataFrame = {
+  def jumpFlag(spec: SeriesSpec, thresh: Double): Column = {
     val w = SeriesWindows.ordered(spec)
-    df.withColumn(out,
-      coalesce(abs(spec.valueCol - lag(spec.valueCol, 1).over(w)) >= thresh, lit(false)))
+    coalesce(abs(spec.valueCol - lag(spec.valueCol, 1).over(w)) >= thresh, lit(false))
   }
 
   /** Range check (:474-477, :565-569): outside [min, max]. */
-  def rangeFlag(df: DataFrame, spec: SeriesSpec, rangeMin: Option[Double],
-      rangeMax: Option[Double], out: String = "flag_range"): DataFrame = {
+  def rangeFlag(spec: SeriesSpec, rangeMin: Option[Double],
+      rangeMax: Option[Double]): Column = {
     val f = (rangeMin, rangeMax) match {
       case (Some(lo), Some(hi)) => spec.valueCol < lo || spec.valueCol > hi
       case (Some(lo), None) => spec.valueCol < lo
       case (None, Some(hi)) => spec.valueCol > hi
       case (None, None) => lit(false)
     }
-    df.withColumn(out, coalesce(f, lit(false)))
+    coalesce(f, lit(false))
   }
 
   /** Missing check (:480-482). */
-  def missingFlag(df: DataFrame, spec: SeriesSpec,
-      out: String = "flag_missing"): DataFrame =
-    df.withColumn(out, spec.valueCol.isNull)
+  def missingFlag(spec: SeriesSpec): Column = spec.valueCol.isNull
 
   /** Discrete Gaussian kernel weights for ±radius row offsets. */
   def gaussianWeights(sigmaPts: Double, radius: Int): Seq[(Int, Double)] =

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.{Rle, SeriesSpec, SeriesWindows}
+import graft.core.{Cols, Rle, SeriesSpec, SeriesWindows}
 
 /** Run-based event detectors (reference `detect_flat_runs`
   * scripts/ufz_water_qc_pipeline.py:208-221, `detect_binary_switches`
@@ -18,6 +18,9 @@ import graft.core.{Rle, SeriesSpec, SeriesWindows}
   */
 object Runs {
 
+  /** The helper columns `Rle.withMarkers` adds. */
+  private val MarkerCols = Seq("__xb", "__rn", "__n", "__marker", "__mkid")
+
   /** Generic flag-run extractor: one event per marker-run whose flag
     * is true and whose [start, next-marker] span is ≥ minHours.
     * The surviving row is the run's start row (original columns pass
@@ -27,14 +30,10 @@ object Runs {
       minHours: Double): DataFrame = {
     val rr = Rle.runs(df, spec, flag)
     val hours =
-      (unix_micros(col("end")) - unix_micros(col("start"))) / lit(3600000000.0)
-    rr.filter(col("__xb"))
-      .withColumn("start", spec.tsCol)
-      .withColumn("end", col("__next_ts"))
-      .filter(hours >= minHours)
-      .withColumn("hours", hours)
-      .drop("__xb", "__rn", "__n", "__marker", "__mkid", "next_rn",
-        "__next_ts", "run_len")
+      (unix_micros(col("__next_ts")) - unix_micros(spec.tsCol)) / lit(3600000000.0)
+    Cols.project(rr.filter(col("__xb") && hours >= minHours),
+      MarkerCols ++ Seq("next_rn", "__next_ts", "run_len"),
+      "start" -> spec.tsCol, "end" -> col("__next_ts"), "hours" -> hours)
   }
 
   /** Flat-value runs: eq[i] = |v[i] − v[i−1]| ≤ absTol (NULLs → not
@@ -63,9 +62,8 @@ object Runs {
       minDur: Int = 1): DataFrame = {
     val w = SeriesWindows.ordered(spec)
     val z = coalesce(spec.valueCol.isNotNull && abs(spec.valueCol) <= zeroTol, lit(false))
-    val d = df
-      .withColumn("__prev_ts", lag(spec.tsCol, 1).over(w))
-      .withColumn("__prev_val", lag(spec.valueCol, 1).over(w))
+    val d = Cols.set(df, "__prev_ts" -> lag(spec.tsCol, 1).over(w),
+      "__prev_val" -> lag(spec.valueCol, 1).over(w))
     val marked = Rle.withMarkers(d, spec, z)
     val rr = Rle.runsFromMarked(marked, spec, carry = Seq(spec.value))
     val endSide = marked.select(
@@ -76,17 +74,14 @@ object Runs {
     }.reduce(_ && _) && col("__end_rn") === col("next_rn") - 1
     rr.filter(col("__xb") && col("run_len") >= minDur)
       .join(endSide, joinCond)
-      .drop((spec.keys.indices.map(i => s"__ek$i") :+ "__end_rn"): _*)
-      .withColumn("start", spec.tsCol)
-      .withColumn("pre", coalesce(col("__prev_ts"), spec.tsCol))
-      .withColumn("pre_val",
-        when(col("__prev_ts").isNotNull, col("__prev_val")).otherwise(spec.valueCol))
-      .withColumn("post", col("__next_ts"))
-      .withColumn("post_val", col(s"__next_${spec.value}"))
+      .select((spec.keyCols :+ spec.tsCol.as("start") :+ col("end") :+
+        coalesce(col("__prev_ts"), spec.tsCol).as("pre") :+
+        col("__next_ts").as("post") :+
+        when(col("__prev_ts").isNotNull, col("__prev_val"))
+          .otherwise(spec.valueCol).as("pre_val") :+
+        col(s"__next_${spec.value}").as("post_val")): _*)
       .filter(col("pre_val").isNotNull && col("post_val").isNotNull &&
         (col("pre_val") =!= 0.0 || col("post_val") =!= 0.0))
-      .select((spec.keyCols :+ col("start") :+ col("end") :+ col("pre")
-        :+ col("post") :+ col("pre_val") :+ col("post_val")): _*)
   }
 
   /** Plateau/constants point mask: every sample inside [start, end] of
@@ -104,36 +99,34 @@ object Runs {
     val qual = Rle.runsFromMarked(marked, spec)
       .filter(col("__xb") && hours >= minHours)
       .select((spec.keyCols :+ col("__mkid") :+ lit(true).as("__qual")): _*)
-    marked.join(qual, spec.keys :+ "__mkid", "left")
-      .withColumn("__in_run", coalesce(col("__qual"), lit(false)))
-      .withColumn(out,
-        col("__in_run") || coalesce(lag(col("__in_run"), 1).over(w), lit(false)))
-      .drop("__xb", "__rn", "__n", "__marker", "__mkid", "__qual", "__in_run")
+    val inRun = coalesce(col("__qual"), lit(false))
+    Cols.project(marked.join(qual, spec.keys :+ "__mkid", "left"),
+      MarkerCols :+ "__qual",
+      out -> (inRun || coalesce(lag(inRun, 1).over(w), lit(false))))
   }
 
   /** Isolated-group mask: finite marker-runs of length ≤
     * toPoints(groupWindow, step) whose start-row delta and next-marker
     * delta both exceed gapHours; ALL rows of such a run are marked
     * (the reference marks m[a:b+1] positionally). Requires `delta_us`;
-    * `stepDf` is (keys*, step_us). Adds boolean `isolated`.
+    * `stepDf` is (keys*, step_us). Adds boolean `out`.
     */
   def isolatedMask(df: DataFrame, spec: SeriesSpec, stepDf: DataFrame,
-      gapHours: Double = 3.0, groupWindowUs: Double = 30 * 60 * 1e6): DataFrame = {
+      gapHours: Double = 3.0, groupWindowUs: Double = 30 * 60 * 1e6,
+      out: String = "isolated"): DataFrame = {
     val gapUs = (gapHours * 3600 * 1e6).toLong
     val marked = Rle.withMarkers(df, spec, spec.valueCol.isNotNull)
+    // floor(x+0.5) = half-UP, vs the reference's half-even int(round())
+    // — deliberate; documented at TimeIndex.toPoints (no shipped
+    // config hits an exact-.5 ratio).
+    val grpPts =
+      greatest(lit(1L), floor(lit(groupWindowUs) / col("step_us") + 0.5).cast("long"))
     val qual = Rle.runsFromMarked(marked, spec, carry = Seq("delta_us"))
-      .filter(col("__xb"))
       .join(stepDf, spec.keys)
-      // floor(x+0.5) = half-UP, vs the reference's half-even int(round())
-      // — deliberate; documented at TimeIndex.toPoints (no shipped
-      // config hits an exact-.5 ratio).
-      .withColumn("__grp_pts",
-        greatest(lit(1L), floor(lit(groupWindowUs) / col("step_us") + 0.5).cast("long")))
-      .filter(col("run_len") <= col("__grp_pts") &&
+      .filter(col("__xb") && col("run_len") <= grpPts &&
         col("delta_us") > gapUs && col("__next_delta_us") > gapUs)
       .select((spec.keyCols :+ col("__mkid") :+ lit(true).as("__iso")): _*)
-    marked.join(qual, spec.keys :+ "__mkid", "left")
-      .withColumn("isolated", coalesce(col("__iso"), lit(false)))
-      .drop("__xb", "__rn", "__n", "__marker", "__mkid", "__iso")
+    Cols.project(marked.join(qual, spec.keys :+ "__mkid", "left"),
+      MarkerCols :+ "__iso", out -> coalesce(col("__iso"), lit(false)))
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.SeriesSpec
+import graft.core.{Cols, SeriesSpec}
 
 /** Meteorological-season aggregation (reference `as_season`
   * scripts/ufz_water_qc_pipeline.py:84-89, `expected_points_per_season`
@@ -22,9 +22,6 @@ object Seasonal {
       .otherwise("SON")
   }
 
-  def withSeason(df: DataFrame, spec: SeriesSpec): DataFrame =
-    df.withColumn("season", seasonOf(spec.tsCol))
-
   /** Per-(series, season) summary. `stepDf` is (keys*, step_us) from
     * TimeIndex.inferStep. The input's `value` column should already
     * carry NULL for missing (post-sentinel, post-gap-mask) samples.
@@ -40,8 +37,8 @@ object Seasonal {
     * the reference emits zero rows for them in its fixed 4-row frame.
     */
   def stats(df: DataFrame, spec: SeriesSpec, stepDf: DataFrame): DataFrame = {
-    val bySeason = withSeason(df, spec)
-      .groupBy((spec.keyCols :+ col("season")): _*)
+    val bySeason = df
+      .groupBy((spec.keyCols :+ seasonOf(spec.tsCol).as("season")): _*)
       .agg(
         count(lit(1)).as("n_obs"),
         (count(lit(1)) - count(spec.valueCol)).as("n_missing"),
@@ -50,12 +47,11 @@ object Seasonal {
     val expected = greatest(lit(1L),
       floor((col("__mx_us") - col("__mn_us") + col("step_us")) / col("step_us") + 0.5)
         .cast("long"))
-    bySeason.join(stepDf, spec.keys)
-      .withColumn("expected_pts", expected)
-      .withColumn("coverage_pct",
-        round(lit(100.0) * (col("n_obs") - col("n_missing")) / greatest(lit(1L), col("expected_pts")), 6))
-      .withColumn("nan_pct", round(lit(100.0) * col("n_missing") / col("n_obs"), 6))
-      .drop("__mn_us", "__mx_us", "step_us")
+    Cols.project(bySeason.join(stepDf, spec.keys), Seq("__mn_us", "__mx_us", "step_us"),
+      "expected_pts" -> expected,
+      "coverage_pct" ->
+        round(lit(100.0) * (col("n_obs") - col("n_missing")) / greatest(lit(1L), expected), 6),
+      "nan_pct" -> round(lit(100.0) * col("n_missing") / col("n_obs"), 6))
   }
 
   /** Full reference seasonal summary: stats + per-season counts of
@@ -68,14 +64,12 @@ object Seasonal {
       flatRuns: DataFrame, flatSlopeRuns: DataFrame): DataFrame = {
     def counts(ev: DataFrame, name: String): DataFrame =
       ev.filter(col("hours") >= 2.0)
-        .withColumn("season", seasonOf(col("start")))
-        .groupBy((spec.keyCols :+ col("season")): _*)
+        .groupBy((spec.keyCols :+ seasonOf(col("start")).as("season")): _*)
         .agg(count(lit(1)).as(name))
-    val base = stats(df, spec, stepDf)
-    base
-      .join(counts(flatRuns, "flat_values_events"), spec.keys :+ "season", "left")
-      .join(counts(flatSlopeRuns, "flat_slopes_events"), spec.keys :+ "season", "left")
-      .withColumn("flat_values_events", coalesce(col("flat_values_events"), lit(0L)))
-      .withColumn("flat_slopes_events", coalesce(col("flat_slopes_events"), lit(0L)))
+    val (fv, fs) = ("flat_values_events", "flat_slopes_events")
+    val joined = stats(df, spec, stepDf)
+      .join(counts(flatRuns, fv), spec.keys :+ "season", "left")
+      .join(counts(flatSlopeRuns, fs), spec.keys :+ "season", "left")
+    Cols.set(joined, fv -> coalesce(col(fv), lit(0L)), fs -> coalesce(col(fs), lit(0L)))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{SeriesSpec, SeriesWindows}
+import graft.core.{Cols, SeriesSpec, SeriesWindows}
 
 /** Rolling linear slope and flat-slope runs (reference
   * `rolling_lin_slope` scripts/ufz_water_qc_pipeline.py:105-123,
@@ -26,14 +26,14 @@ object Slope {
     val wPart = Window.partitionBy(spec.keyCols: _*)
     val t = (unix_micros(spec.tsCol) -
       min(unix_micros(spec.tsCol)).over(wPart)) / lit(1000000.0)
-    val d = df.withColumn("__t", t)
-      .withColumn("__tm", when(spec.valueCol.isNotNull, col("__t")))
-    d.withColumn(out,
+    // two projections: the frame aggregates cannot take the
+    // partition-min window as their input
+    val d = df.withColumn("__tm", when(spec.valueCol.isNotNull, t))
+    Cols.project(d, Seq("__tm"), out ->
       when(count(spec.valueCol).over(frame) >= minp &&
         var_pop(col("__tm")).over(frame) > 0,
         covar_pop(col("__tm"), spec.valueCol).over(frame) /
           var_pop(col("__tm")).over(frame)))
-      .drop("__t", "__tm")
   }
 
   /** Flat-slope runs: |slope| ≤ absSlope (finite) sessionized exactly

@@ -67,94 +67,86 @@ object Pipeline {
     // branch re-scans and re-cleans the source (observed: 20 scans /
     // 60 exchanges in the physical plan). MEMORY_AND_DISK: spills
     // rather than OOMs at scale.
-    d = graft.core.Caches.persisted(d)
-    val step = graft.core.Caches.persisted(TimeIndex.inferStep(d, spec))
+    val base = graft.core.Caches.persisted(d)
+    val step = graft.core.Caches.persisted(TimeIndex.inferStep(base, spec))
 
     // -- event detectors on the clean series -------------------------------
-    val evBin = Runs.binarySwitches(d, spec, cfg.zeroTol)
+    val evBin = Runs.binarySwitches(base, spec, cfg.zeroTol)
       .withColumn("type", lit("binary_switch"))
-    val evFlat = Runs.flatValues(d, spec, cfg.flatHours)
+    val evFlat = Runs.flatValues(base, spec, cfg.flatHours)
       .withColumn("type", lit("flat_values"))
-    val evSlope = Slope.flatSlopes(d, spec, cfg.flatHours, cfg.flatSlopeWin,
+    val evSlope = Slope.flatSlopes(base, spec, cfg.flatHours, cfg.flatSlopeWin,
       cfg.flatSlopeAbs).withColumn("type", lit("flat_slopes"))
     val events = evBin
       .unionByName(evFlat.drop("value"), allowMissingColumns = true)
       .unionByName(evSlope, allowMissingColumns = true)
 
     // -- seasonal summary (with flat-event counts) -------------------------
-    val seasonal = Seasonal.statsWithEvents(d, spec, step, evFlat, evSlope)
+    val seasonal = Seasonal.statsWithEvents(base, spec, step, evFlat, evSlope)
 
     // -- QC suite ----------------------------------------------------------
+    // The suite's flags ride along to the final projection, which ORs
+    // them into `saqc_flag`, with the per-variable range check in place
+    // of the suite's own (unbounded) one.
     val varCol = variableCol.map(col)
     val (rmin, rmax) = perVariableRange(cfg, varCol)
-    if (cfg.applySaqc) {
-      d = d.withColumn("__flag_range0", coalesce(
-        spec.valueCol < rmin || spec.valueCol > rmax, lit(false)))
+    d = base
+    val saqc = if (cfg.applySaqc) {
       val qcCfg = QcConfig(rangeMin = None, rangeMax = None,
         flatHours = cfg.flatHours, kVariance = cfg.kVariance,
         kZscore = cfg.kZscore, jumpThresh = cfg.jumpThresh)
       d = QcSuite(d, spec, step, qcCfg)
-        .withColumn("flag_range", col("__flag_range0"))
-        .withColumn("saqc_flag",
-          (QcSuite.FlagCols.map(col) :+ col("__flag_range0")).reduce(_ || _))
-        .drop("__flag_range0", "qc_flag")
-    } else d = d.withColumn("saqc_flag", lit(false))
+      val range = coalesce(spec.valueCol < rmin || spec.valueCol > rmax, lit(false))
+      QcSuite.FlagCols.map(c => if (c == "flag_range") range else col(c)).reduce(_ || _)
+    } else lit(false)
 
     // -- SentemQC side-band (on the RAW series — SURVEY §4.2 trap 12) ------
-    d = if (cfg.applySentem && varCol.isDefined) {
-      val mapped = cfg.variables.collect {
-        case (v, vc) if vc.sentemCode.isDefined => (v, vc.sentemCode.get, vc.isNitrate)
-      }.toSeq
-      if (mapped.isEmpty) withNullSentem(d)
-      else {
-        val smSpec = spec
-        val smParts = mapped.map { case (v, code, isNitrate) =>
-          val sub = d.filter(varCol.get === v)
-            .select((spec.keyCols :+ spec.tsCol :+ col("raw").as("__smv")): _*)
-          SentemQc(sub, smSpec.copy(value = "__smv"), code,
-            SentemConfig.byCode(code), isNitrate)
-            .select((spec.keyCols :+ spec.tsCol :+
-              col("value_masked").as("sm_masked") :+
-              col("is_flagged").as("sm_flagged") :+
-              col("flag_reason").as("sm_flagreason") :+
-              col("qcband_top") :+ col("qcband_bottom")): _*)
-        }
-        val sm = smParts.reduce(_ unionByName _)
-        d.join(sm, spec.keys :+ spec.ts, "left")
+    val mapped = if (cfg.applySentem && varCol.isDefined) cfg.variables.collect {
+      case (v, vc) if vc.sentemCode.isDefined => (v, vc.sentemCode.get, vc.isNitrate)
+    }.toSeq else Nil
+    val smCols = Seq("sm_masked", "sm_flagged", "sm_flagreason", "qcband_top",
+      "qcband_bottom")
+    val sentem = if (mapped.isEmpty) {
+      smCols.zip(Seq("double", "boolean", "string", "double", "double"))
+        .map { case (c, t) => lit(null).cast(t).as(c) }
+    } else {
+      val smParts = mapped.map { case (v, code, isNitrate) =>
+        val sub = d.filter(varCol.get === v)
+          .select((spec.keyCols :+ spec.tsCol :+ col("raw").as("__smv")): _*)
+        SentemQc(sub, spec.copy(value = "__smv"), code,
+          SentemConfig.byCode(code), isNitrate)
+          .select((spec.keyCols :+ spec.tsCol :+
+            col("value_masked").as("sm_masked") :+
+            col("is_flagged").as("sm_flagged") :+
+            col("flag_reason").as("sm_flagreason") :+
+            col("qcband_top") :+ col("qcband_bottom")): _*)
       }
-    } else withNullSentem(d)
+      d = d.join(smParts.reduce(_ unionByName _), spec.keys :+ spec.ts, "left")
+      smCols.map(col)
+    }
 
     // -- optional WRTDS ----------------------------------------------------
     val wrtdsOn = cfg.wrtdsQCol.isDefined && cfg.wrtdsQCol.exists(d.columns.contains)
-    d = if (wrtdsOn) {
-      val withResid = Wrtds.proxy(d, spec, cfg.wrtdsQCol)
-      Wrtds.buster(withResid, spec)
-    } else d.withColumn("wrtds_spike", lit(false))
+    val spike = if (wrtdsOn) {
+      d = Wrtds.buster(Wrtds.proxy(d, spec, cfg.wrtdsQCol), spec)
+      col("wrtds_spike")
+    } else lit(false)
 
     // -- final mask: !finite(clean) | saqc | wrtds — Sentem EXCLUDED -------
-    d = d
-      .withColumn("clean", spec.valueCol)
-      .withColumn("accepted",
-        when(col("clean").isNull || col("saqc_flag") || col("wrtds_spike"),
-          lit(null)).otherwise(col("clean")))
-
     // qcband_top/bottom ride along for the figure layer only — the
     // wide/CSV sinks keep the reference's persisted layout without them
-    val tsCols = spec.keyCols ++ Seq(spec.tsCol, col("raw"), col("clean"),
-      col("accepted"), col("saqc_flag"), col("sm_masked"), col("sm_flagged"),
-      col("sm_flagreason"), col("qcband_top"), col("qcband_bottom"))
+    val clean = spec.valueCol
+    val timeseries = d.select((spec.keyCols ++ Seq(spec.tsCol, col("raw"),
+      clean.as("clean"),
+      when(clean.isNull || saqc || spike, lit(null)).otherwise(clean).as("accepted"),
+      saqc.as("saqc_flag")) ++ sentem): _*)
+    // the sentinel codes counted on the persisted base's raw values:
+    // the rows and values of `df` that have a step row to join to
     val meta = step
-      .join(Sentinels.activeCodesList(df, spec), spec.keys, "left")
+      .join(Sentinels.activeCodesList(base, spec.copy(value = "raw")), spec.keys, "left")
       .withColumn("wrtds_ok", lit(wrtdsOn))
-    Result(d.select(tsCols: _*), events, seasonal, meta)
+    Result(timeseries, events, seasonal, meta)
   }
-
-  private def withNullSentem(d: DataFrame): DataFrame = d
-    .withColumn("sm_masked", lit(null).cast("double"))
-    .withColumn("sm_flagged", lit(null).cast("boolean"))
-    .withColumn("sm_flagreason", lit(null).cast("string"))
-    .withColumn("qcband_top", lit(null).cast("double"))
-    .withColumn("qcband_bottom", lit(null).cast("double"))
 
   /** Range bounds per variable via a when-chain (NULL = unbounded). */
   private def perVariableRange(cfg: PipelineConfig, varCol: Option[Column])
@@ -187,11 +179,9 @@ object Pipeline {
       .agg(valueCols.map(c => first(col(c)).as(c)).head,
         valueCols.map(c => first(col(c)).as(c)).tail: _*)
     // <var>_<field> -> <var>__<field> for golden-layout parity
-    valueCols.foldLeft(pivoted) { (acc, f) =>
-      variables.foldLeft(acc) { (a, v) =>
-        a.withColumnRenamed(s"${v}_$f", s"${v}__$f")
-      }
-    }
+    val renamed = (for (f <- valueCols; v <- variables)
+      yield s"${v}_$f" -> s"${v}__$f").toMap
+    pivoted.toDF(pivoted.columns.toSeq.map(c => renamed.getOrElse(c, c)): _*)
   }
 
   /** Sinks: wide parquet partitioned by station + csv side tables

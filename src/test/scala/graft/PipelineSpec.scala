@@ -54,6 +54,41 @@ class PipelineSpec extends SparkTestBase {
     assert(w.count() == 20)
   }
 
+  private def layout(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.schema.fields.toSeq.map(f => s"${f.name}:${f.dataType.simpleString}")
+
+  test("the four Result tables and the wide pivot keep their column layout") {
+    import spark.implicits._
+    val df = mkSeries(60, i => Some(if (i < 6) -9.0 else 20.0 + (i % 5)))
+      .union(mkSeries(60, i => Some(7.0 + i * 0.01)).withColumn("variable", lit("v2")))
+    val cfg = PipelineConfig(kVariance = 6, kZscore = 8, applySentem = false,
+      variables = Map("v1" -> VariableConfig(rangeMin = Some(0.0), rangeMax = Some(50.0)),
+        "v2" -> VariableConfig(rangeMax = Some(7.205))))
+    val r = Pipeline.run(df, spec, cfg, variableCol = Some("variable"))
+    val keys = Seq("station:string", "variable:string")
+    assert(layout(r.timeseries) == keys ++ Seq("ts:timestamp", "raw:double",
+      "clean:double", "accepted:double", "saqc_flag:boolean", "sm_masked:double",
+      "sm_flagged:boolean", "sm_flagreason:string", "qcband_top:double",
+      "qcband_bottom:double"))
+    assert(layout(r.events) == keys ++ Seq("start:timestamp", "end:timestamp",
+      "pre:timestamp", "post:timestamp", "pre_val:double", "post_val:double",
+      "type:string", "hours:double"))
+    assert(layout(r.seasonal) == keys ++ Seq("season:string", "n_obs:bigint",
+      "n_missing:bigint", "expected_pts:bigint", "coverage_pct:double",
+      "nan_pct:double", "flat_values_events:bigint", "flat_slopes_events:bigint"))
+    assert(layout(r.meta) == keys ++ Seq("step_us:double",
+      "sentinel_used:array<double>", "wrtds_ok:boolean"))
+    val fields = Seq("raw:double", "clean:double", "accepted:double",
+      "saqc_flag:boolean", "sm_masked:double", "sm_flagged:boolean",
+      "sm_flagreason:string")
+    val w = Pipeline.wide(r.timeseries, "station", "variable", "ts", Seq("v2", "v1"))
+    assert(layout(w) == Seq("station:string", "ts:timestamp") ++
+      Seq("v2", "v1").flatMap(v => fields.map(f => s"${v}__$f")))
+    // the range check is per variable: v2 is flagged above 7.205 only
+    assert(r.timeseries.filter($"variable" === "v2" && $"saqc_flag").count() == 39)
+    graft.core.Caches.unpersistAll()
+  }
+
   test("name sanitizer collapses illegal path characters to underscores") {
     import graft.sources.Ingest
     // reference _sanitize: re.sub('[^A-Za-z0-9._-]+', '_', s)
