@@ -4,22 +4,24 @@ object Bench {
 
   /** Per-query medians from a committed BENCH_local.json — the
     * adjudication baseline. Missing/unparsable file, or a baseline
-    * recorded at a DIFFERENT scale factor than this run (the outlier
-    * rules are only meaningful same-SF), → empty map (every query then
+    * recorded at a DIFFERENT scale factor or core count than this run
+    * (the outlier rules are only meaningful same-SF, same-host), or
+    * one that records no core count, → empty map (every query then
     * records un-adjudicated, same as before).
     */
-  private def committedMedians(path: String, sfDir: String): Map[String, Double] =
+  private[graft] def committedMedians(path: String, sfDir: String,
+      cpus: String): Map[String, Double] =
     try {
       import org.json4s._
       val txt = new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
         java.nio.charset.StandardCharsets.UTF_8)
       val parsed = org.json4s.jackson.JsonMethods.parse(txt)
-      val sfOk = parsed \ "sf" match {
-        case JString(s) => s == sfDir
+      def is(field: String, want: String): Boolean = parsed \ field match {
+        case JString(s) => s == want
         case _ => false
       }
-      if (!sfOk) Map.empty
+      if (!is("sf", sfDir) || !is("cpus", cpus)) Map.empty
       else parsed \ "queries" match {
         case JObject(fields) => fields.collect {
           case (k, JDouble(v)) => k -> v
@@ -107,7 +109,7 @@ object Bench {
       "BENCH_local.json")
     val committed =
       if (basePath.isEmpty || basePath == "none") Map.empty[String, Double]
-      else committedMedians(basePath, sfDir)
+      else committedMedians(basePath, sfDir, Sessions.cpus)
     // CHEAPEST-FIRST execution order (committed medians ascending,
     // unknown/new queries last, name as deterministic tiebreak): the
     // first queries in a fresh JVM absorb global JIT warmup — with
@@ -326,7 +328,7 @@ object Bench {
     val familyJson = familySec.map { case (f, sec) => "\"" + f + "\":" + sec }
       .mkString("{", ",", "}")
     val total = familySec.map(_._2).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_sec":$gc,"n_samples":$ns,"stat_rule":"n=1 single sample; n even min; n odd median; errored samples outranked by clean ones; an adjudicated row (see adjudicated) reports min(statistic, remeasure) and its remeasure counts into n_samples","adjudicated":$adjJson,"errors":$errJson,"family_sec":$familyJson,"trace":$traceJson,"slow_trace":$slowTraceJson,"reps":$reps,"truncated":${skipped.nonEmpty},"skipped":$skippedJson,"wall_sec":${f"$wallTrue%.2f"},"wall_charged_sec":${f"$wallSpent%.2f"},"env_inflation":${f"$infl%.3f"},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_sec":$gc,"n_samples":$ns,"stat_rule":"n=1 single sample; n even min; n odd median; errored samples outranked by clean ones; an adjudicated row (see adjudicated) reports min(statistic, remeasure) and its remeasure counts into n_samples","adjudicated":$adjJson,"errors":$errJson,"family_sec":$familyJson,"trace":$traceJson,"slow_trace":$slowTraceJson,"reps":$reps,"truncated":${skipped.nonEmpty},"skipped":$skippedJson,"wall_sec":${f"$wallTrue%.2f"},"wall_charged_sec":${f"$wallSpent%.2f"},"env_inflation":${f"$infl%.3f"},"sf":"$sfDir","cpus":"${Sessions.cpus}"}"""
     println(json)
     // Self-contained artifact: the driver captures only a stdout tail,
     // which truncated the round-5 record to 22/58 medians. Writing the

@@ -4,7 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+
+import graft.sources.Tables
 
 /** Dev loupe for named registry queries, next to [[Bench]]'s sweep;
   * not part of the engine surface.
@@ -26,12 +30,19 @@ import org.apache.spark.sql.execution.FormattedMode
   * before execution, to `DIR/<query>[_<suffix>].txt`; with `--reps 0`
   * nothing runs and only the plans are written.
   *
-  * Usage: tools/run_main.sh graft.Dev --sf DIR [--reps N]
+  * `--scale N` runs the queries on an N× replica of the `--sf` tables
+  * instead ([[graft.sources.Tables.replicate]]: ids offset per
+  * replica), written to a temp dir under
+  * `java.io.tmpdir`, announced with one `[dev] scale N <table> rows=…`
+  * line per table and deleted on exit. The registry is the scale
+  * harness: every query's build is the oracle-checked one.
+  *
+  * Usage: tools/run_main.sh graft.Dev --sf DIR [--scale N] [--reps N]
   *   [--plans DIR [--suffix S]] q_a q_b ...
   */
 object Dev {
   private val Usage =
-    "usage: graft.Dev --sf DIR [--reps N] [--plans DIR [--suffix S]] query..."
+    "usage: graft.Dev --sf DIR [--scale N] [--reps N] [--plans DIR [--suffix S]] query..."
 
   def main(args: Array[String]): Unit = {
     var opts = Map.empty[String, String]
@@ -41,24 +52,39 @@ object Dev {
       case f if f.startsWith("--") && it.hasNext => opts += f.drop(2) -> it.next()
       case n => names :+= n
     }
-    val unknown = (opts.keySet -- Set("sf", "reps", "plans", "suffix")).map("--" + _)
+    val unknown = (opts.keySet -- Set("sf", "scale", "reps", "plans", "suffix")).map("--" + _)
     require(opts.contains("sf") && names.nonEmpty && unknown.isEmpty,
       s"${unknown.map(u => s"unknown $u\n").mkString}$Usage")
     SparkEntry.requireKnown(names)
-    val sf = opts("sf")
+    val scale = opts.get("scale").map(_.toInt)
+    require(scale.forall(_ >= 1), s"--scale must be at least 1\n$Usage")
     val reps = opts.get("reps").map(_.toInt).getOrElse(3).max(0)
-    val suffix = opts.get("suffix").map("_" + _).getOrElse("")
     opts.get("plans").foreach(d => Files.createDirectories(Paths.get(d)))
 
     val spark = Sessions.local()
-    val tracer = new QueryTrace(spark.sparkContext)
+    val replica = scale.map(n => n -> Files.createTempDirectory("graft-scale"))
+    try {
+      val sf = replica.fold(opts("sf")) { case (n, dir) =>
+        Tables.replicate(spark, opts("sf"), n, dir.toString).foreach {
+          case (t, rows) => println(s"[dev] scale $n $t rows=$rows")
+        }
+        dir.toString
+      }
+      run(spark, sf, names, reps, opts.get("plans"),
+        opts.get("suffix").map("_" + _).getOrElse(""))
+    } finally replica.foreach { case (_, dir) => FileUtils.deleteDirectory(dir.toFile) }
+    spark.stop()
+  }
 
+  private def run(spark: SparkSession, sf: String, names: Seq[String],
+      reps: Int, plans: Option[String], suffix: String): Unit = {
+    val tracer = new QueryTrace(spark.sparkContext)
     names.foreach { n =>
       try {
         val tw = System.nanoTime()
         val cw = QueryTrace.compiles
         val warm = SparkEntry.queries(n)(spark, sf)
-        opts.get("plans").foreach { d =>
+        plans.foreach { d =>
           Files.writeString(Paths.get(d, s"$n$suffix.txt"),
             warm.queryExecution.explainString(FormattedMode))
           println(s"[dev] $n plan written")
@@ -82,6 +108,5 @@ object Dev {
         case NonFatal(t) => println(s"[dev] $n FAILED: $t")
       } finally graft.core.Caches.unpersistAll(blocking = true)
     }
-    spark.stop()
   }
 }

@@ -18,6 +18,10 @@ import graft.sources.Ingest
   * The reference iterates variables serially in one process; here the
   * 5 variables are one long-form DataFrame and the per-variable loop
   * is the partition axis.
+  *
+  * Usage: graft.GoldenBench [reps] [stations] — `reps` timed passes
+  * (default 3) over the corpus replicated to `stations` synthetic
+  * stations (default 1).
   */
 object GoldenBench {
   /** The reference's committed outputs (the golden corpus), read here
@@ -47,7 +51,7 @@ object GoldenBench {
     // series = more parallelism" scale claim: per-series work is
     // identical, only the partition axis widens. N=1 → the plain
     // 5-series golden corpus.
-    val nStations = sys.env.getOrElse("SPARK_GRAFT_GOLDEN_STATIONS", "1").toInt
+    val nStations = if (args.length > 1) args(1).toInt else 1
     val longN = if (nStations <= 1) long else
       long.withColumn("__r", explode(array((0 until nStations).map(lit(_)): _*)))
         .withColumn("station", concat(col("station"), lit("__r"), col("__r")))

@@ -63,8 +63,8 @@ final case class Trace(build: Phase, plan: Phase, exec: Phase,
 }
 
 /** The harness's one SparkListener, registered on `sc` when created
-  * (Bench, Dev and OpsScaleBench create one per session; `Sessions`
-  * does not). [[run]] runs a query under a job tag of its own and
+  * (Bench and Dev create one per session; `Sessions` does not).
+  * [[run]] runs a query under a job tag of its own and
   * rolls every job, stage and task carrying the tag up to the phase
   * the job started in: queries traced at once on two threads never
   * mix, and the jobs Spark runs for a query on its broadcast and

@@ -87,10 +87,10 @@ object Sessionize {
     * aggregate still combines map-side: each task emits one candidate
     * row per key, so the exchange moves O(keys) rows, not the log.
     * Measured 4.2× faster than the row_number()-window formulation at
-    * 3.2M rows / 24k keys (EventsScaleBench compact n=32: 1.0 s vs
-    * 4.16 s) — the window shape must shuffle-and-sort every surviving
-    * row where this reduces before the wire; the gap widens with
-    * rows-per-key.
+    * 3.2M rows / 24k keys (1.0 s vs 4.16 s, compact at n=32 in the
+    * events scale harness that commit e581814 still has) — the window
+    * shape must shuffle-and-sort every surviving row where this
+    * reduces before the wire; the gap widens with rows-per-key.
     */
   def compactLatest(df: DataFrame, keys: Seq[String], ts: String,
       tiebreak: String): DataFrame = {

@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -106,4 +109,96 @@ object Tables {
       events(spark, dir, sliceUs).select("user_id", "ts", "value", "event_id"),
       eventsSpec, col("event_id"))
       .drop("event_id")
+
+  /** Replica r's id columns are offset by r times this. It is prime,
+    * so replicas never land on one residue class of a sharding
+    * modulus: an offset of 10^7 is divisible by 16 and put every
+    * replica back on its original shard.
+    */
+  val ReplicaIdOffset = 10000019L
+
+  /** The tables that grow with the replica count, each with its id and
+    * key columns. The other sf tables are dimensions.
+    */
+  private val FactKeys = Seq(
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"),
+    "events" -> Seq("event_id", "user_id"),
+    "lineitem" -> Seq("l_orderkey"),
+    "orders" -> Seq("o_orderkey"))
+  private val Dimensions = Seq("customer", "supplier", "part", "nation", "region")
+
+  /** Writes an `n`× copy of the sf dir `srcDir` to `outDir`, one
+    * `<table>.parquet` file per table like the source, and returns each
+    * table's row count there, facts first.
+    *
+    * A fact table is the union of `n` replicas. Replica 0 is the
+    * table itself, so `n = 1` reads exactly the source data and fixed
+    * query sets (`doc_id < 5`, `vec_id < 10`) stay fixed at any `n`.
+    * Replica r offsets every id and key column by r·[[ReplicaIdOffset]]
+    * (ids must lie in [0, offset), or replicas would collide); in
+    * `documents` it also tags every word of `text` with `_r` and
+    * recomputes `n_chars`, and in `embeddings` it rotates each vector
+    * by r places (a rotation repeats once r reaches the dimension). So
+    * no duplicate, match, session or join crosses replicas, unless a
+    * query derives data from an id's value: q_jpeg_neardup draws its
+    * images from `doc_id % 10^7`, so its replicas do match. Dimension
+    * tables are copied unchanged.
+    *
+    * Tables are read with raw `spark.read.parquet` and keep their
+    * physical types (the events `ts` contract). Row groups are capped
+    * at 8 MB so a large replica file still splits across scan tasks.
+    */
+  def replicate(spark: SparkSession, srcDir: String, n: Int,
+      outDir: String): Seq[(String, Long)] = {
+    require(n >= 1, s"replica count must be at least 1: $n")
+    Files.createDirectories(Paths.get(outDir))
+    FactKeys.foreach { case (table, keys) =>
+      val src = spark.read.parquet(s"$srcDir/$table.parquet")
+      val bounds = keys.flatMap(k => Seq(min(k), max(k)))
+      val range = src.agg(bounds.head, bounds.tail: _*).head()
+      keys.indices.foreach { i =>
+        val (lo, hi) = (range.getAs[Number](2 * i), range.getAs[Number](2 * i + 1))
+        require(lo == null || (lo.longValue >= 0 && hi.longValue < ReplicaIdOffset),
+          s"$srcDir/$table: ${keys(i)} spans $lo..$hi, outside " +
+            s"[0, $ReplicaIdOffset), so replicas would collide")
+      }
+      writeFile((0 until n).map(r => replica(src, table, keys, r))
+        .reduce(_ unionByName _), Paths.get(outDir, s"$table.parquet"))
+    }
+    Dimensions.foreach(t =>
+      Files.copy(Paths.get(srcDir, s"$t.parquet"), Paths.get(outDir, s"$t.parquet")))
+    (FactKeys.map(_._1) ++ Dimensions).map(t =>
+      t -> spark.read.parquet(s"$outDir/$t.parquet").count())
+  }
+
+  private def replica(src: DataFrame, table: String, keys: Seq[String],
+      r: Int): DataFrame =
+    if (r == 0) src
+    else {
+      def typed(c: Column, name: String): (String, Column) =
+        name -> c.cast(src.schema(name).dataType)
+      val own = table match {
+        case "documents" =>
+          val text = regexp_replace(col("text"), lit("(\\S+)"), lit(s"$$1_$r"))
+          Seq(typed(text, "text"), typed(length(text), "n_chars"))
+        case "embeddings" =>
+          val e = col("embedding")
+          val k = lit(r) % size(e)
+          val rotated = concat(slice(e, k + 1, size(e) - k), slice(e, lit(1), k))
+          Seq(typed(rotated, "embedding"))
+        case _ => Nil
+      }
+      val ids = keys.map(k => typed(col(k) + lit(r * ReplicaIdOffset), k))
+      src.withColumns((ids ++ own).toMap)
+    }
+
+  /** `df` as one parquet file at `file`. */
+  private def writeFile(df: DataFrame, file: Path): Unit = {
+    val parts = file.resolveSibling(s"${file.getFileName}.parts")
+    df.coalesce(1).write.option("parquet.block.size", 8L << 20).parquet(parts.toString)
+    val part = parts.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, file)
+    FileUtils.deleteDirectory(parts.toFile)
+  }
 }

@@ -34,9 +34,10 @@ object Wrtds {
     * finite-q column when the q-kernel is on (its MAD bandwidth needs
     * a median over all finite q values).
     *
-    * Block size default (2048) is measured, not guessed: SpillBench on
-    * a 20,000-row single series (sf0.1 events, median-of-3) ran ~11%
-    * faster with 2048-row blocks than 65536 (the i-block's flat
+    * Block size default (2048) is measured, not guessed: the spill
+    * harness that commit e581814 still has ran a 20,000-row single
+    * series (sf0.1 events, median-of-3) ~11% faster with 2048-row
+    * blocks than 65536 (the i-block's flat
     * normal-equation arrays fit cache; short series also stop paying
     * a 3.7 MB fill-array allocation each), and forcing every block
     * through the spill file at the same block size was free within

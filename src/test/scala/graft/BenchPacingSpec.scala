@@ -9,9 +9,32 @@ import org.scalatest.funsuite.AnyFunSuite
   * SECOND SAMPLES, not queries. r15: the pacing inflation numerator is
   * the capped charge of FIRST samples only (second samples and
   * adjudication re-measures no longer inflate the estimate), and
-  * envInflation is the true median for even sizes.
+  * envInflation is the true median for even sizes. The baseline itself
+  * is only used when it was taken at the same sf and core count.
   */
 class BenchPacingSpec extends AnyFunSuite {
+
+  /** `committedMedians` over a baseline file holding `fields`. */
+  private def medians(fields: String): Map[String, Double] = {
+    val f = java.nio.file.Files.createTempFile("bench_baseline", ".json")
+    try {
+      java.nio.file.Files.writeString(f, s"""{"queries":{"q_a":1.5},$fields}""")
+      Bench.committedMedians(f.toString, "/sf", "4")
+    } finally java.nio.file.Files.delete(f)
+  }
+
+  test("baseline at the same sf and core count is used") {
+    assert(medians(""""sf":"/sf","cpus":"4"""") == Map("q_a" -> 1.5))
+  }
+
+  test("baseline at a different core count or sf is refused") {
+    assert(medians(""""sf":"/sf","cpus":"32"""").isEmpty)
+    assert(medians(""""sf":"/other","cpus":"4"""").isEmpty)
+  }
+
+  test("baseline that records no core count is refused") {
+    assert(medians(""""sf":"/sf"""").isEmpty)
+  }
 
   test("no baseline: falls back to the r13 wallSpent<=budget rule") {
     assert(Bench.allowSecondSample(599.0, 599.0, 0.0, 0.0, 1.0, 600.0))
