@@ -328,7 +328,12 @@ object Bench {
     val familyJson = familySec.map { case (f, sec) => "\"" + f + "\":" + sec }
       .mkString("{", ",", "}")
     val total = familySec.map(_._2).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_sec":$gc,"n_samples":$ns,"stat_rule":"n=1 single sample; n even min; n odd median; errored samples outranked by clean ones; an adjudicated row (see adjudicated) reports min(statistic, remeasure) and its remeasure counts into n_samples","adjudicated":$adjJson,"errors":$errJson,"family_sec":$familyJson,"trace":$traceJson,"slow_trace":$slowTraceJson,"reps":$reps,"truncated":${skipped.nonEmpty},"skipped":$skippedJson,"wall_sec":${f"$wallTrue%.2f"},"wall_charged_sec":${f"$wallSpent%.2f"},"env_inflation":${f"$infl%.3f"},"sf":"$sfDir","cpus":"${Sessions.cpus}"}"""
+    // per query, the reported sample's fixed cost and job count
+    val fixedJson = results.map { case (k, s) => "\"" + k + "\":" + f"${s.trace.fixedSec}%.3f" }
+      .mkString("{", ",", "}")
+    val jobsJson = results.map { case (k, s) => "\"" + k + "\":" + s.trace.jobs }
+      .mkString("{", ",", "}")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_sec":$gc,"n_samples":$ns,"stat_rule":"n=1 single sample; n even min; n odd median; errored samples outranked by clean ones; an adjudicated row (see adjudicated) reports min(statistic, remeasure) and its remeasure counts into n_samples","adjudicated":$adjJson,"errors":$errJson,"family_sec":$familyJson,"fixed_sec":$fixedJson,"jobs":$jobsJson,"trace":$traceJson,"slow_trace":$slowTraceJson,"reps":$reps,"truncated":${skipped.nonEmpty},"skipped":$skippedJson,"wall_sec":${f"$wallTrue%.2f"},"wall_charged_sec":${f"$wallSpent%.2f"},"env_inflation":${f"$infl%.3f"},"sf":"$sfDir","cpus":"${Sessions.cpus}"}"""
     println(json)
     // Self-contained artifact: the driver captures only a stdout tail,
     // which truncated the round-5 record to 22/58 medians. Writing the

@@ -58,6 +58,11 @@ final case class Trace(build: Phase, plan: Phase, exec: Phase,
     exchanges: Int, error: Option[Throwable]) {
   def phases: Seq[Phase] = Seq(build, plan, exec)
   def wallSec: Double = phases.map(_.wallSec).sum
+  /** The wall a query pays whatever its data: build and exec driver
+    * time outside jobs, plus planning.
+    */
+  def fixedSec: Double = build.driverSec + plan.wallSec + exec.driverSec
+  def jobs: Int = phases.map(_.jobs).sum
   def json: String =
     s"""{"build":${build.json},"plan":${plan.json},"exec":${exec.json},"exchanges":$exchanges}"""
 }

@@ -63,7 +63,7 @@ object Rle {
     runsFromMarked(withMarkers(df, spec, flag), spec, carry)
 
   /** As `runs`, from an existing `withMarkers` output (lets callers
-    * reuse the marked base for mask joins).
+    * reuse the marked base).
     */
   def runsFromMarked(marked: DataFrame, spec: SeriesSpec,
       carry: Seq[String] = Seq.empty): DataFrame = {

@@ -11,8 +11,14 @@ import org.apache.spark.sql.functions._
   * pandas Series per variable in a driver loop
   * (scripts/ufz_water_qc_pipeline.py:753-759). Here each series is one
   * window partition — `keys` is the scale axis: 100 TB = many series,
-  * each processed independently after a single hash partitioning that
-  * every window stage below reuses (one exchange, one sort).
+  * each processed independently after a single hash partitioning on
+  * the keys that every window stage below reuses.
+  *
+  * In the QC pass that is one exchange, under the persisted base: the
+  * keep-first dedup (TimeIndex.dedupKeepFirst) plans it, and the
+  * sentinel counts and every series window reuse it. Above the base
+  * the suite's windows and run masks (a window over (keys, marker id))
+  * plan none; the wide sink adds one, by station (Pipeline.wide).
   */
 final case class SeriesSpec(
     keys: Seq[String] = Seq("series"),
@@ -100,8 +106,4 @@ object SeriesWindows {
       (element_at(arr, ((n + lit(1)) / lit(2)).cast("int")) +
         element_at(arr, (n / lit(2)).cast("int") + lit(1))) / lit(2.0))
   }
-
-  /** Count of non-null values in the frame (support / min_periods input). */
-  def rollingCount(value: Column, w: WindowSpec): Column =
-    count(value).over(w)
 }

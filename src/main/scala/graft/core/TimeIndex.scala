@@ -22,12 +22,18 @@ object TimeIndex {
 
   /** Drop duplicate (keys, ts) rows, keeping the first by `tiebreak`
     * (reference keep-first dedup, ufz_water_qc_pipeline.py:74).
+    *
+    * Ranked inside the series partitioning: partition by the keys,
+    * order by (ts, tiebreak), and keep a row when it is its series'
+    * first or its predecessor's ts differs (null-safe, so one null-ts
+    * row survives per series, as under a (keys, ts) partitioning).
+    * The hash exchange on the keys this plans is the one every later
+    * series window, and the per-series aggregates, reuse.
     */
   def dedupKeepFirst(df: DataFrame, spec: SeriesSpec, tiebreak: Column): DataFrame = {
-    val w = Window.partitionBy((spec.keyCols :+ spec.tsCol): _*).orderBy(tiebreak)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    val w = Window.partitionBy(spec.keyCols: _*).orderBy(spec.tsCol, tiebreak)
+    val keep = row_number().over(w) === 1 || !(spec.tsCol <=> lag(spec.tsCol, 1).over(w))
+    df.withColumn("__keep", keep).filter(col("__keep")).drop("__keep")
   }
 
   /** Resolve duplicate timestamps by per-(keys, ts) median of value

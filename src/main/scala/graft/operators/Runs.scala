@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.core.{Cols, Rle, SeriesSpec, SeriesWindows}
 
@@ -84,49 +85,72 @@ object Runs {
         (col("pre_val") =!= 0.0 || col("post_val") =!= 0.0))
   }
 
+  /** The rows of one marker-run: partition by (keys, `__mkid`). The
+    * series partitioning already satisfies it, so qualifying a run
+    * over it plans a sort but no exchange. The window is unordered:
+    * every aggregate over it is order-free (a run's one marker row is
+    * its start).
+    */
+  private def runRows(spec: SeriesSpec): WindowSpec =
+    Window.partitionBy((spec.keyCols :+ col("__mkid")): _*)
+
+  /** `c` of the next row when that row is a marker: on a run's last
+    * row, the next marker's `c`; NULL on every other row.
+    */
+  private def atNextMarker(spec: SeriesSpec, c: Column): Column = {
+    val w = SeriesWindows.ordered(spec)
+    when(lead(col("__marker"), 1).over(w), lead(c, 1).over(w))
+  }
+
   /** Plateau/constants point mask: every sample inside [start, end] of
     * a qualifying flat run — rows sharing the run's marker id plus the
-    * next marker row (one lag, no range join). Adds boolean `out`.
+    * next marker row (one lag, no range join). A run qualifies over
+    * [[runRows]]. Adds boolean `out`.
     */
   def flatMask(df: DataFrame, spec: SeriesSpec, minHours: Double = 2.0,
       absTol: Double = 0.0, out: String = "flag_plateau"): DataFrame = {
     val w = SeriesWindows.ordered(spec)
     val eq =
       coalesce(abs(spec.valueCol - lag(spec.valueCol, 1).over(w)) <= absTol, lit(false))
-    val marked = Rle.withMarkers(df, spec, eq)
-    val hours = (unix_micros(col("__next_ts")) - unix_micros(spec.tsCol)) /
-      lit(3600000000.0)
-    val qual = Rle.runsFromMarked(marked, spec)
-      .filter(col("__xb") && hours >= minHours)
-      .select((spec.keyCols :+ col("__mkid") :+ lit(true).as("__qual")): _*)
-    val inRun = coalesce(col("__qual"), lit(false))
-    Cols.project(marked.join(qual, spec.keys :+ "__mkid", "left"),
-      MarkerCols :+ "__qual",
-      out -> (inRun || coalesce(lag(inRun, 1).over(w), lit(false))))
+    val marked = Cols.set(Rle.withMarkers(df, spec, eq),
+      "__next_ts" -> atNextMarker(spec, spec.tsCol))
+    val run = runRows(spec)
+    val hours = (unix_micros(max(col("__next_ts")).over(run)) -
+      unix_micros(max(when(col("__marker"), spec.tsCol)).over(run))) / lit(3600000000.0)
+    val qual = Cols.set(marked, "__qual" ->
+      coalesce(bool_or(col("__marker") && col("__xb")).over(run) && hours >= minHours,
+        lit(false)))
+    Cols.project(qual, MarkerCols ++ Seq("__next_ts", "__qual"),
+      out -> (col("__qual") || coalesce(lag(col("__qual"), 1).over(w), lit(false))))
   }
 
   /** Isolated-group mask: finite marker-runs of length ≤
     * toPoints(groupWindow, step) whose start-row delta and next-marker
     * delta both exceed gapHours; ALL rows of such a run are marked
-    * (the reference marks m[a:b+1] positionally). Requires `delta_us`;
-    * `stepDf` is (keys*, step_us). Adds boolean `out`.
+    * (the reference marks m[a:b+1] positionally). A run qualifies over
+    * [[runRows]]. Requires `delta_us`; `stepDf` is (keys*, step_us).
+    * Adds boolean `out`.
     */
   def isolatedMask(df: DataFrame, spec: SeriesSpec, stepDf: DataFrame,
       gapHours: Double = 3.0, groupWindowUs: Double = 30 * 60 * 1e6,
       out: String = "isolated"): DataFrame = {
     val gapUs = (gapHours * 3600 * 1e6).toLong
-    val marked = Rle.withMarkers(df, spec, spec.valueCol.isNotNull)
+    val marked = Cols.set(Rle.withMarkers(df, spec, spec.valueCol.isNotNull),
+      "__next_delta" -> atNextMarker(spec, col("delta_us")))
+    val stepKeys = spec.keys.indices.map(i => s"__sk$i")
+    val step = stepDf.select((spec.keys.zip(stepKeys).map { case (k, s) => col(k).as(s) }
+      :+ col("step_us").as("__step_us")): _*)
+    val withStep = marked.join(step, spec.keys.zip(stepKeys).map { case (k, s) =>
+      col(k) === col(s) }.reduce(_ && _), "left")
     // floor(x+0.5) = half-UP, vs the reference's half-even int(round())
     // — deliberate; documented at TimeIndex.toPoints (no shipped
     // config hits an exact-.5 ratio).
     val grpPts =
-      greatest(lit(1L), floor(lit(groupWindowUs) / col("step_us") + 0.5).cast("long"))
-    val qual = Rle.runsFromMarked(marked, spec, carry = Seq("delta_us"))
-      .join(stepDf, spec.keys)
-      .filter(col("__xb") && col("run_len") <= grpPts &&
-        col("delta_us") > gapUs && col("__next_delta_us") > gapUs)
-      .select((spec.keyCols :+ col("__mkid") :+ lit(true).as("__iso")): _*)
-    Cols.project(marked.join(qual, spec.keys :+ "__mkid", "left"),
-      MarkerCols :+ "__iso", out -> coalesce(col("__iso"), lit(false)))
+      greatest(lit(1L), floor(lit(groupWindowUs) / col("__step_us") + 0.5).cast("long"))
+    val run = runRows(spec)
+    val iso = bool_or(col("__marker") && col("__xb") && col("delta_us") > gapUs).over(run) &&
+      count(lit(1)).over(run) <= grpPts && max(col("__next_delta")).over(run) > gapUs
+    Cols.project(withStep, MarkerCols ++ stepKeys ++ Seq("__next_delta", "__step_us"),
+      out -> coalesce(iso, lit(false)))
   }
 }

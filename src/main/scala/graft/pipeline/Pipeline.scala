@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import java.util.concurrent.{ExecutionException, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.{SeriesSpec, TimeIndex}
@@ -35,7 +38,10 @@ final case class PipelineConfig(
   * declarative dataflow over the long-form table (reference
   * ufz_water_qc_pipeline.py:666-772). The reference's per-variable
   * Python loop is the partition axis here: every stage is a window or
-  * aggregate over (station, variable), sharing one hash partitioning.
+  * aggregate over (station, variable), sharing one hash partitioning:
+  * the keep-first dedup's exchange under the persisted base. The
+  * stages above the base plan no exchange; the wide sink plans one
+  * ([[wide]]), and [[write]] runs the four sinks at once.
   *
   * Ingest contract: input is keep-first deduped on (keys, ts) — the
   * reference does that inside `ensure_time_index` (:74) before any
@@ -166,47 +172,86 @@ object Pipeline {
 
   /** Pivot the long QC output to the reference's wide layout
     * (`<var>__raw`, `__clean`, `__accepted`, `__saqc_flag`, `__sm_*`;
-    * ufz_water_qc_pipeline.py:739-744, :761). Explicit variable list —
-    * no pivot-inference job at scale.
+    * ufz_water_qc_pipeline.py:739-744, :761), one row per (station,
+    * ts), variables in the order given.
+    *
+    * One conditional aggregate per cell (the first non-null value of
+    * the cell's variable) over `timeseries` hash-partitioned by
+    * station: the (station, ts) grouping runs inside that partitioning,
+    * so the whole pivot plans ONE exchange, and each partition holds
+    * whole stations for a station-partitioned write.
     */
   def wide(timeseries: DataFrame, stationCol: String, variableCol: String,
       tsCol: String, variables: Seq[String]): DataFrame = {
     val valueCols = Seq("raw", "clean", "accepted", "saqc_flag",
       "sm_masked", "sm_flagged", "sm_flagreason")
-    val pivoted = timeseries
+    val cells = for (v <- variables; f <- valueCols) yield
+      first(when(col(variableCol) === v, col(f)), ignoreNulls = true).as(s"${v}__$f")
+    timeseries.repartition(col(stationCol))
       .groupBy(col(stationCol), col(tsCol))
-      .pivot(variableCol, variables)
-      .agg(valueCols.map(c => first(col(c)).as(c)).head,
-        valueCols.map(c => first(col(c)).as(c)).tail: _*)
-    // <var>_<field> -> <var>__<field> for golden-layout parity
-    val renamed = (for (f <- valueCols; v <- variables)
-      yield s"${v}_$f" -> s"${v}__$f").toMap
-    pivoted.toDF(pivoted.columns.toSeq.map(c => renamed.getOrElse(c, c)): _*)
+      .agg(cells.head, cells.tail: _*)
   }
 
-  /** Sinks: wide parquet partitioned by station + csv side tables
+  /** The four sinks of [[write]], by table: the wide parquet
+    * partitioned by station and the events, seasonal and meta CSVs
     * (reference build_structure/run_pipeline write layout).
+    */
+  private[graft] def sinks(r: Result, outDir: String, stationCol: String,
+      variableCol: String, tsCol: String, variables: Seq[String])
+      : Seq[(String, () => Unit)] = {
+    def csv(df: DataFrame, name: String): () => Unit = () =>
+      df.write.mode("overwrite").option("header", "true").csv(s"$outDir/tables/$name")
+    Seq(
+      // station names become partition directory names — sanitize them
+      // exactly as the reference sanitizes its per-station paths
+      // (_sanitize, ufz_water_qc_pipeline.py:65-66) instead of relying
+      // on Spark's URL-escaping of special characters.
+      "timeseries" -> (() => wide(r.timeseries, stationCol, variableCol, tsCol, variables)
+        .withColumn(stationCol, graft.sources.Ingest.sanitizeNameCol(col(stationCol)))
+        .write.mode("overwrite").partitionBy(stationCol)
+        .parquet(s"$outDir/processed/qc_timeseries.parquet")),
+      "events" -> csv(r.events, "events_all.csv"),
+      "seasonal" -> csv(r.seasonal, "seasonal_all.csv"),
+      "meta" -> csv(r.meta.withColumn("sentinel_used", // CSV-safe list repr like the reference
+        concat(lit("["), array_join(col("sentinel_used"), ", "), lit("]"))), "meta.csv"))
+  }
+
+  /** Writes the four tables of `r` under `outDir` at once: each sink's
+    * jobs run from a driver thread of a pool made for this call, so
+    * the scheduler fills the cores one sink leaves idle with another's
+    * tasks. The threads start inside the call and so inherit the
+    * caller's Spark local properties: its job tags and job group. It
+    * returns when every sink has finished; if any failed, it then
+    * throws the failure of the first failing sink in the order of
+    * [[sinks]], naming its table, with the others suppressed. The wide sink plans
+    * one exchange (see [[wide]]); the three CSVs read the persisted
+    * base and step tables without one.
     */
   def write(r: Result, outDir: String, stationCol: String,
       variableCol: String, tsCol: String, variables: Seq[String]): Unit = {
-    // station names become partition directory names — sanitize them
-    // exactly as the reference sanitizes its per-station paths
-    // (_sanitize, ufz_water_qc_pipeline.py:65-66) instead of relying
-    // on Spark's URL-escaping of special characters.
-    wide(r.timeseries, stationCol, variableCol, tsCol, variables)
-      .withColumn(stationCol,
-        graft.sources.Ingest.sanitizeNameCol(col(stationCol)))
-      .repartition(col(stationCol))
-      .write.mode("overwrite").partitionBy(stationCol)
-      .parquet(s"$outDir/processed/qc_timeseries.parquet")
-    r.events.write.mode("overwrite").option("header", "true")
-      .csv(s"$outDir/tables/events_all.csv")
-    r.seasonal.write.mode("overwrite").option("header", "true")
-      .csv(s"$outDir/tables/seasonal_all.csv")
-    r.meta
-      .withColumn("sentinel_used", // CSV-safe list repr like the reference
-        concat(lit("["), array_join(col("sentinel_used"), ", "), lit("]")))
-      .write.mode("overwrite").option("header", "true")
-      .csv(s"$outDir/tables/meta.csv")
+    val all = sinks(r, outDir, stationCol, variableCol, tsCol, variables)
+    val pool = Executors.newFixedThreadPool(all.size, new ThreadFactory {
+      private val n = new AtomicInteger()
+      def newThread(task: Runnable): Thread =
+        new Thread(task, s"${WriterThreadPrefix}${n.incrementAndGet()}")
+    })
+    try {
+      val running = all.map { case (name, sink) => name -> pool.submit[Unit](() => sink()) }
+      val failures = running.flatMap { case (name, f) =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(name -> e.getCause) }
+      }
+      failures.headOption.foreach { case (name, cause) =>
+        val e = new RuntimeException(s"Pipeline.write: the $name sink failed: $cause", cause)
+        failures.tail.foreach(f => e.addSuppressed(f._2))
+        throw e
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
+
+  /** The name prefix of [[write]]'s sink threads. */
+  private[graft] val WriterThreadPrefix = "graft-pipeline-write-"
 }

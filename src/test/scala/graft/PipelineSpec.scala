@@ -133,6 +133,106 @@ class PipelineSpec extends SparkTestBase {
     assert(medResid < 1.0)
   }
 
+  /** Two stations × two variables with sentinels, a flat run and a
+    * range violation: every sink gets rows.
+    */
+  private def sinkFixture(): Pipeline.Result = {
+    val one = mkSeries(80, i => Some(if (i < 6) -9.0 else if (i > 40 && i < 60) 3.0
+      else 20.0 + (i % 5)))
+    val df = Seq("st1", "st/2").flatMap(st => Seq("v1", "v2").map(v =>
+      one.withColumn("station", lit(st)).withColumn("variable", lit(v))))
+      .reduce(_ union _)
+    val cfg = PipelineConfig(kVariance = 6, kZscore = 8, applySentem = false,
+      variables = Map("v1" -> VariableConfig(rangeMax = Some(23.5)),
+        "v2" -> VariableConfig(rangeMin = Some(0.0), rangeMax = Some(50.0))))
+    Pipeline.run(df, spec, cfg, variableCol = Some("variable"))
+  }
+
+  private val tables = Seq("processed/qc_timeseries.parquet", "tables/events_all.csv",
+    "tables/seasonal_all.csv", "tables/meta.csv")
+
+  /** Order-insensitive digest of a written table: rows and the exact
+    * sum of the per-row 64-bit hashes.
+    */
+  private def digest(dir: String, table: String): (Long, BigDecimal) = {
+    val df = if (table.endsWith(".parquet")) spark.read.parquet(s"$dir/$table")
+      else spark.read.option("header", "true").csv(s"$dir/$table")
+    val r = df.select(xxhash64(df.columns.map(c => col(s"`$c`")): _*).as("h"))
+      .agg(count(lit(1)), sum(col("h").cast("decimal(38,0)"))).head()
+    (r.getLong(0), BigDecimal(Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO)))
+  }
+
+  private def tmpDir(): String =
+    java.nio.file.Files.createTempDirectory("pipeline_sinks").toString
+
+  private def sinkThreads(): Set[Thread] =
+    Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSet
+      .filter(_.getName.startsWith(Pipeline.WriterThreadPrefix))
+
+  private val wideArgs = ("station", "variable", "ts", Seq("v1", "v2"))
+
+  test("the four sinks written at once digest-equal the same sinks written in turn") {
+    val (st, vr, ts, vars) = wideArgs
+    try {
+      val r = sinkFixture()
+      val (inTurn, atOnce) = (tmpDir(), tmpDir())
+      Pipeline.sinks(r, inTurn, st, vr, ts, vars).foreach(_._2())
+      Pipeline.write(r, atOnce, st, vr, ts, vars)
+      tables.foreach { t =>
+        val d = digest(atOnce, t)
+        assert(d._1 > 0, s"$t wrote no rows")
+        assert(d == digest(inTurn, t), s"$t differs between the two writes")
+      }
+      // the sanitized station names are the partition directories
+      assert(new java.io.File(s"$atOnce/processed/qc_timeseries.parquet/station=st_2").isDirectory)
+    } finally graft.core.Caches.unpersistAll()
+  }
+
+  test("a failing sink fails write with its table's name and leaves no sink thread") {
+    val (st, vr, ts, vars) = wideArgs
+    try {
+      val r = sinkFixture()
+      val bad = r.copy(meta = r.meta.withColumn("step_us",
+        when(col("step_us") > 0, raise_error(lit("meta sink down"))).otherwise(col("step_us"))))
+      val e = intercept[RuntimeException](Pipeline.write(bad, tmpDir(), st, vr, ts, vars))
+      assert(e.getMessage.contains("the meta sink failed"), e.getMessage)
+      assert(sinkThreads().isEmpty, s"sink threads outlived write: ${sinkThreads()}")
+    } finally graft.core.Caches.unpersistAll()
+  }
+
+  test("every write job carries the caller's job tag under QueryTrace.run") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.graftbridge.ListenerFlush
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (st, vr, ts, vars) = wideArgs
+    val sc = spark.sparkContext
+    val tracer = new QueryTrace(sc)
+    val jobs = new AtomicInteger
+    val all = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(all)
+    try {
+      val r = sinkFixture()
+      var writeJobs = -1
+      val t = tracer.run {
+        ListenerFlush.flush(sc)
+        val before = jobs.get
+        Pipeline.write(r, tmpDir(), st, vr, ts, vars)
+        ListenerFlush.flush(sc)
+        writeJobs = jobs.get - before
+        spark.range(1).toDF()
+      }
+      t.error.foreach(throw _)
+      assert(writeJobs >= 4, s"write ran $writeJobs jobs")
+      assert(t.build.jobs == writeJobs)
+    } finally {
+      sc.removeSparkListener(all)
+      sc.removeSparkListener(tracer)
+      graft.core.Caches.unpersistAll()
+    }
+  }
+
   test("SparkEntry.entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

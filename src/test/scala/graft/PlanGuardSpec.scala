@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Similarity, TextStats}
@@ -144,12 +145,12 @@ class PlanGuardSpec extends SparkTestBase {
       try {
         val df = SparkEntry.queries("q_qc_suite")(spark, sfDir)
         val n = shuffleCount(df)
-        // persisted-base shape: the base build's (keys, ts) dedup +
-        // (keys) window exchanges, plus the two run-id join sides.
-        // Before the base was persisted this was 8 shuffles and FOUR
-        // scans of the same parquet (each self-join branch re-planned
-        // the dedup+gap subtree).
-        assert(n <= 4, s"q_qc_suite plans $n shuffles — exchange reuse regressed")
+        // the keep-first dedup partitions by the series keys, so the
+        // persisted base's windows and the run masks (a window over
+        // (keys, marker id)) plan no exchange above it; the one left is
+        // the step branch's dedup exchange, which inferStep's aggregate
+        // reuses.
+        assert(n <= 1, s"q_qc_suite plans $n shuffles — exchange reuse regressed")
       } finally graft.core.Caches.unpersistAll()
     }
   }
@@ -172,9 +173,37 @@ class PlanGuardSpec extends SparkTestBase {
         val df = SparkEntry.queries("q_pipeline")(spark, sfDir)
         val n = shuffleCount(df)
         // downstream of the persisted cleaned base the final assembly
-        // plans 2 shuffles; side-band columns (sm_*, qcband_*) must
-        // ride existing joins, never add an exchange
-        assert(n <= 2, s"q_pipeline plans $n shuffles — assembly regressed")
+        // plans no shuffle: the suite's windows and run masks run in
+        // the base's series partitioning, and side-band columns (sm_*,
+        // qcband_*) ride existing joins.
+        assert(n == 0, s"q_pipeline plans $n shuffles — assembly regressed")
+      } finally graft.core.Caches.unpersistAll()
+    }
+  }
+
+  test("the timeseries sink plans one shuffle, by station, above the persisted base") {
+    withStaticPlans {
+      try {
+        import spark.implicits._
+        import graft.pipeline.{Pipeline, PipelineConfig}
+        val df = (0 until 40).flatMap(i => Seq("a", "b").map(st =>
+          (st, "v1", new java.sql.Timestamp(1700000000000L + i * 900000L), 1.0 + i % 3)))
+          .toDF("station", "variable", "ts", "value")
+        val r = Pipeline.run(df, graft.core.SeriesSpec(Seq("station", "variable")),
+          PipelineConfig(kVariance = 6, kZscore = 8, applySentem = false),
+          variableCol = Some("variable"))
+        val wide = Pipeline.wide(r.timeseries, "station", "variable", "ts", Seq("v1"))
+        val shuffles = wide.queryExecution.executedPlan.collect {
+          case s: ShuffleExchangeExec => s
+        }
+        assert(shuffles.size == 1, s"the timeseries sink plans ${shuffles.size} shuffles")
+        shuffles.head.outputPartitioning match {
+          case h: HashPartitioning =>
+            assert(h.expressions.size == 1 &&
+              h.expressions.head.references.map(_.name).toSet == Set("station"),
+              s"the sink shuffles by ${h.expressions}")
+          case p => fail(s"the sink shuffle is not a hash partitioning: $p")
+        }
       } finally graft.core.Caches.unpersistAll()
     }
   }

@@ -29,6 +29,16 @@ class QueryTraceSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(t.build.jobs == 0 && t.plan.jobs == 0)
   }
 
+  test("fixed cost is build and exec time outside jobs plus the plan wall") {
+    val t = ok(tracer.run {
+      spark.range(0, 1000, 1, 3).filter(col("id") % 7 === 0).collect()
+      grouped(4, 31)
+    })
+    assert(t.jobs == t.build.jobs + t.exec.jobs && t.build.jobs >= 1 && t.exec.jobs >= 1)
+    assert(t.fixedSec == t.build.driverSec + t.plan.wallSec + t.exec.driverSec)
+    assert(t.fixedSec > 0 && t.fixedSec <= t.wallSec)
+  }
+
   test("the broadcast job of a broadcast join counts in exec") {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger

@@ -146,6 +146,26 @@ class RunsSpec extends SparkTestBase {
     assert(out.toSeq == Seq(1.0, 2.0))
   }
 
+  test("dedup keep-first in the series partitioning equals the row_number reference") {
+    import spark.implicits._
+    // duplicate ts, several null-ts rows per series, a single-row
+    // series, and tiebreaks that disagree with the row order
+    val rng = new scala.util.Random(7)
+    val stamps = None +: (0 until 6).map(i => Some(f"2024-01-01 0$i:00:00"))
+    val rows = (0 until 200).map { i =>
+      val s = if (i == 0) "solo" else s"s${1 + rng.nextInt(5)}"
+      (s, stamps(rng.nextInt(stamps.size)).orNull, i.toDouble, rng.nextLong())
+    }
+    val df = rows.toDF("series", "ts_s", "value", "seq")
+      .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
+    def kept(d: org.apache.spark.sql.DataFrame) =
+      d.select("seq").as[Long].collect().sorted.toSeq
+    val ours = kept(TimeIndex.dedupKeepFirst(df, spec, col("seq")))
+    assert(ours == kept(graft.core.TimeIndexReference.dedupKeepFirst(df, spec, col("seq"))))
+    // one row per distinct (series, ts), the null ts counted once
+    assert(ours.size == rows.map(r => (r._1, r._2)).distinct.size)
+  }
+
   // -- season_multiyear_coverage -------------------------------------------
   test("seasonal expected points span first-to-last ts per season across years") {
     val df = series(
