@@ -92,7 +92,13 @@ object Dedup {
     * ~n²/2^61; the oracle computes the same hash from the string
     * form). Output: id, sh60.
     */
-  def shinglesHashed(df: DataFrame, id: String, text: String, k: Int): DataFrame = {
+  def shinglesHashed(df: DataFrame, id: String, text: String, k: Int): DataFrame =
+    shingleRows(df, id, text, k).distinct()
+
+  /** [[shinglesHashed]] before its distinct: one (id, sh60) row per
+    * shingle occurrence.
+    */
+  private def shingleRows(df: DataFrame, id: String, text: String, k: Int): DataFrame = {
     val words = split(lower(trim(col(text))), "\\s+")
     val positions = gramPositions(col("__words"), k)
     // project to the two used columns, then fan an under-split scan
@@ -105,8 +111,35 @@ object Dedup {
       .withColumn("__i", explode(positions))
       .withColumn("sh60",
         hash60(array_join(slice(col("__words"), col("__i"), lit(k)), " ")))
-      .select(col(id), col("sh60")).distinct()
+      .select(col(id), col("sh60"))
   }
+
+  /** The jaccard family's per-document shingle aggregate: ONE
+    * groupBy(id) over [[shingleRows]] gives `__shs`, the doc's distinct
+    * 60-bit shingle hashes, and `n = size(__shs)` as bigint (the
+    * historical count() schema the oracle compare is sensitive to),
+    * plus any `extra` aggregates over the same rows (the MinHash
+    * signature mins). Docs shorter than k words have no shingles and
+    * no row. Candidate generation explodes `__shs` back into distinct
+    * (id, sh60) rows and the verify tail reads the arrays, so every
+    * branch of an operator's plan repeats this one aggregate and AQE
+    * reuses its exchange: no cache, and no job while the query is
+    * built. Per-row memory is bounded by the largest document's
+    * shingle count (the same bound as any groupBy on doc id).
+    *
+    * The aggregates are packed into one struct column: branches read
+    * different columns (MinHash bands the mins, the verify tail the
+    * arrays), and column pruning would otherwise split the aggregate
+    * into per-branch copies that share no exchange and re-run the
+    * shingle pass (sf0.1 q_dedup_minhash on 4 cores, 7 reps: median
+    * 2.2–2.4 s packed, 2.9–3.2 s split).
+    */
+  private def shingleSets(rows: DataFrame, id: String, extra: Column*): DataFrame =
+    rows.groupBy(id)
+      .agg(struct(array_distinct(collect_list(col("sh60"))).as("__shs") +: extra: _*)
+        .as("__agg"))
+      .select(col(id), col("__agg.*"))
+      .withColumn("n", size(col("__shs")).cast("long"))
 
   /** Shared exact-verification tail: per candidate pair, intersection
     * over the FULL hashed shingle sets (candidate-driven — only pairs
@@ -117,11 +150,11 @@ object Dedup {
     * corpus can yield a multi-GB pair set), so the join strategy is
     * left to AQE's runtime size estimate instead of being forced.
     *
-    * Intersection shape: the shingle table is first collapsed to ONE
-    * ROW PER DOC (`collect_list` → an array of 60-bit hashes), then
-    * each candidate pair joins its two arrays and scores with
-    * `size(array_intersect(a, b))` — a codegen'd hash-probe local to
-    * the pair's row. The alternative (exploded pair×shingle equi-join
+    * Intersection shape: `arr` has ONE ROW PER DOC (id, __shs: the
+    * doc's distinct shingle hashes as array<long>, n = their count) —
+    * [[shingleSets]], or the prefix join's ranked arrays. Each
+    * candidate pair joins its two arrays and scores their intersection
+    * count locally in the pair's row. The alternative (exploded pair×shingle equi-join
     * + groupBy(id_a,id_b) count) shuffles |pairs|·|shingles/doc| rows
     * through a join AND an aggregate; the array form moves each doc's
     * shingles ONCE into the per-doc row and the pair join carries
@@ -132,59 +165,7 @@ object Dedup {
     * Per-row memory is bounded by the largest single document's
     * shingle count (identical bound to a groupBy on doc id).
     */
-  private def verifyJaccard(sh: DataFrame, cands: DataFrame, id: String,
-      threshold: Double, withInter: Boolean,
-      containment: Boolean = false): DataFrame = {
-    // Only candidate documents' shingle sets participate in the
-    // verification — restrict the shingle table FIRST. Without this,
-    // the (id_b, sh60) join and the sizes aggregate shuffle the
-    // ENTIRE corpus' shingles even when candidates are a millionth of
-    // it; with it, the verify tail's shuffles scale with the
-    // candidate volume. Scores stay exact: the restricted table keeps
-    // every shingle of every candidate doc.
-    // The candidate set is reused by several branches below and
-    // carries the whole candidate-generation lineage (band joins,
-    // signatures) — cache it or every branch re-runs that lineage.
-    val candsC = graft.core.Caches.cached(cands)
-    val candIds = candsC.select(col("id_a").as(id))
-      .union(candsC.select(col("id_b").as(id))).distinct()
-    // ADAPTIVE restriction: the join + second cache only pay off when
-    // candidates are a small slice of the corpus (the 100 TB case). On
-    // a corpus where most docs are candidates (high duplication rate,
-    // or a small benchmark SF), the restriction machinery costs more
-    // than the shingles it prunes — so one cheap count of distinct
-    // candidate ids (also materializing the candidate cache we need
-    // anyway) decides: restrict only when candidates cover less than
-    // half the SHINGLED documents. The denominator is the shingle
-    // table's own distinct-doc count (approximate is fine — this only
-    // picks a perf path), NOT the input corpus count: docs too short
-    // to shingle never appear in `sh`, so corpus count would bias
-    // toward restricting, and it would cost a full extra input scan.
-    // Both counts run over tables that are cached and needed anyway.
-    // NOTE (documented in COVERAGE.md): building a dedup query
-    // therefore fires these two small planning jobs at construction
-    // time, AQE-style. Scores are identical on both paths.
-    val nCand = candIds.count()
-    val nShDocs = sh.agg(approx_count_distinct(col(id)).as("n"))
-      .head().getLong(0)
-    val shC = if (nCand * 2 >= nShDocs) sh
-      else graft.core.Caches.cached(sh.join(candIds, Seq(id)))
-    // one row per doc: full shingle set as an array + its size. The
-    // shingle sets are distinct by construction (shinglesHashed ends
-    // in .distinct()), so size(array_intersect) IS the set
-    // intersection cardinality.
-    val arr = graft.core.Caches.cached(
-      shC.groupBy(id).agg(collect_list(col("sh60")).as("__shs"),
-        count(lit(1)).as("n")))
-    verifyJaccardArr(arr, candsC, id, threshold, withInter, containment)
-  }
-
-  /** Verify tail over a pre-built one-row-per-doc shingle-array table
-    * (id, __shs: array<long>, n) — see [[verifyJaccard]]. Split out so
-    * generators that already materialize per-doc arrays (the prefix
-    * join) can feed them straight in without rebuilding.
-    */
-  private def verifyJaccardArr(arr: DataFrame, cands: DataFrame,
+  private[graft] def verifyJaccardArr(arr: DataFrame, cands: DataFrame,
       id: String, threshold: Double, withInter: Boolean,
       containment: Boolean = false): DataFrame = {
     // jaccard = inter/union (symmetric); containment = inter/min-set
@@ -260,19 +241,28 @@ object Dedup {
     * Output: id_a < id_b, inter, jaccard (≥ threshold).
     */
   def ngramJaccardCapped(df: DataFrame, id: String, text: String, k: Int,
-      threshold: Double, maxDf: Int): DataFrame = {
-    val sh = graft.core.Caches.cached(shinglesHashed(df, id, text, k))
-    verifyJaccard(sh, dfCappedCandidates(sh, id, maxDf), id, threshold,
-      withInter = true)
+      threshold: Double, maxDf: Int): DataFrame =
+    cappedPairs(df, id, text, k, threshold, maxDf, containment = false)
+
+  /** The df-capped scorers' shared body: candidates from the per-doc
+    * shingle aggregate exploded back into distinct (id, sh60) rows,
+    * verified against the same aggregate.
+    */
+  private def cappedPairs(df: DataFrame, id: String, text: String, k: Int,
+      threshold: Double, maxDf: Int, containment: Boolean): DataFrame = {
+    val sets = shingleSets(shingleRows(df, id, text, k), id)
+    val sh = sets.select(col(id), explode(col("__shs")).as("sh60"))
+    verifyJaccardArr(sets, dfCappedCandidates(sh, id, maxDf), id, threshold,
+      withInter = true, containment)
   }
 
   /** df-capped inverted-index candidate generation, shared by the
     * capped-jaccard and containment scorers (one definition so the
     * cap/pairing semantics can't drift): shingles with df ≤ maxDf form
     * the index, candidates are distinct pairs sharing ≥ 1 indexed
-    * shingle, id_a < id_b.
+    * shingle, id_a < id_b. `sh` holds distinct (id, sh60) rows.
     */
-  private def dfCappedCandidates(sh: DataFrame, id: String,
+  private[graft] def dfCappedCandidates(sh: DataFrame, id: String,
       maxDf: Int): DataFrame = {
     val rare = sh.groupBy("sh60").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf).select("sh60")
@@ -373,11 +363,8 @@ object Dedup {
     * Output: id_a < id_b, inter, containment (≥ threshold).
     */
   def containmentPairs(df: DataFrame, id: String, text: String, k: Int,
-      threshold: Double, maxDf: Int): DataFrame = {
-    val sh = graft.core.Caches.cached(shinglesHashed(df, id, text, k))
-    verifyJaccard(sh, dfCappedCandidates(sh, id, maxDf), id, threshold,
-      withInter = true, containment = true)
-  }
+      threshold: Double, maxDf: Int): DataFrame =
+    cappedPairs(df, id, text, k, threshold, maxDf, containment = true)
 
   /** Per-row MinHash signature ARRAY — element i is the min over the
     * doc's k-word shingles of h1 + i·h2 (Kirsch-Mitzenmacher double
@@ -434,8 +421,8 @@ object Dedup {
   }
 
   /** MinHash + LSH near-dup detection. numHashes double-hashed
-    * min-signatures per doc (see [[minHashSigArray]] — per-row fold,
-    * no signature shuffle); signatures grouped into `bands` bands
+    * min-signatures per doc, aggregated with the doc's shingle set
+    * ([[shingleSets]]); signatures grouped into `bands` bands
     * whose arithmetic mix is the LSH bucket key; docs sharing any
     * (band, key) bucket are candidates; candidates are verified with
     * exact shingle Jaccard. Deterministic end to end.
@@ -445,31 +432,30 @@ object Dedup {
       numHashes: Int = 12, bands: Int = 6, threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    val sh = graft.core.Caches.cached(shinglesHashed(df, id, text, k))
-    // Batch signatures stay the groupBy-min aggregation over the
-    // CACHED shingle table (which the verify tail needs anyway, so
-    // the shingle pass is paid exactly once, codegen'd). The per-row
+    // Batch signatures are min aggregates in the per-doc shingle
+    // aggregate the verify tail reads anyway ([[shingleSets]]), so the
+    // shingle pass is planned once, codegen'd. The per-row
     // [[minHashSigArray]] fold was A/B-measured here: 14.0 s vs 6 s
     // at sf0.1 — higher-order-function lambdas evaluate interpreted
     // (outside whole-stage codegen), so folding in-row re-runs the
-    // shingle+md5 pass at interpreted speed while the cached table
-    // still gets built for verification. The fold remains the right
+    // shingle+md5 pass at interpreted speed. The fold remains the right
     // shape where no shuffle is available at all — the STREAMING
     // detector (StreamingQc.nearDupCandidatesStream) uses it, and
     // ExtSpec's "per-row minhash signatures equal the shingle-table
-    // groupBy aggregation" pins both formulations equal.
+    // groupBy aggregation" pins both formulations equal. The min over
+    // the shingle multiset equals the min over the distinct set.
     // Kirsch-Mitzenmacher double hashing: ONE md5 per shingle row
     // yields two independent sub-hashes (h1: 60 bits, h2: 44 bits);
     // signature_i = min(h1 + i·h2) is then pure long arithmetic — no
     // per-signature string hashing, no overflow (max < 2^61), and the
     // identical expression runs in the SQL oracle.
     val hex = md5(col("sh60").cast("string"))
-    val shH = sh
+    val shH = shingleRows(df, id, text, k)
       .withColumn("__h1", conv(substring(hex, 1, 15), 16, 10).cast("long"))
       .withColumn("__h2", conv(substring(hex, 16, 11), 16, 10).cast("long"))
     val sigAggs = (0 until numHashes).map(i =>
       min(col("__h1") + lit(i.toLong) * col("__h2")).as(s"sig_$i"))
-    val sigs = shH.groupBy(id).agg(sigAggs.head, sigAggs.tail: _*)
+    val sigs = shingleSets(shH, id, sigAggs: _*)
     // band key mixes its row signatures arithmetically; the mod keeps
     // every intermediate below 2^62 for any band width (no BIGINT
     // overflow in either engine); band id disambiguates identical keys
@@ -487,7 +473,7 @@ object Dedup {
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col(s"x.$id") < col(s"y.$id"))
       .select(col(s"x.$id").as("id_a"), col(s"y.$id").as("id_b")).distinct()
-    verifyJaccard(sh, cands, id, threshold, withInter = false)
+    verifyJaccardArr(sigs, cands, id, threshold, withInter = false)
   }
 
   /** 32-bit SimHash over word occurrences: bit j of the fingerprint is

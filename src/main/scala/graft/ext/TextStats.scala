@@ -1023,7 +1023,7 @@ object TextStats {
     * Shape: one tokenize+hash pass, ONE groupBy(id) collecting the
     * positioned hash array, then window-min selection as pure per-row
     * array ops — no self-join, no window exchange; per-row memory is
-    * bounded by the longest document (the verifyJaccard array bound).
+    * bounded by the longest document (the verifyJaccardArr array bound).
     * The (hash, position) pair is packed into one BIGINT
     * (40-bit gram hash · 2²⁰ + (2²⁰−1 − pos)) so a single array_min
     * realizes "min hash, ties → rightmost" in both engines; documents

@@ -16,15 +16,18 @@ import graft.core.{SeriesSpec, TimeIndex}
 object Ingest {
 
   /** CSV → DataFrame with a parsed `ts` column. `schema` None infers
-    * (convenience flag only — explicit schemas at scale).
+    * it through [[FileSchemas]]: once per version of the file, so a
+    * second read of an unchanged CSV builds without a Spark job.
     */
   def readCsvTimeSeries(spark: SparkSession, path: String,
       schema: Option[StructType] = None, tsCol: String = "timestamp",
       tz: Option[String] = None, stationField: Option[String] = None,
       stationValue: Option[String] = None): DataFrame = {
-    val rd = spark.read.option("header", "true")
-    val base = schema.map(rd.schema).getOrElse(rd.option("inferSchema", "true"))
-      .csv(path)
+    val base = schema match {
+      case Some(s) => spark.read.option("header", "true").schema(s).csv(path)
+      case None => FileSchemas.read(spark, "csv", path,
+        Map("header" -> "true", "inferSchema" -> "true"))
+    }
     val withTs = tz match {
       case Some(z) => base.withColumn("ts", to_utc_timestamp(col(tsCol), z))
       case None => base.withColumn("ts", to_timestamp(col(tsCol)))

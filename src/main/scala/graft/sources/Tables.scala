@@ -11,8 +11,19 @@ import graft.core.{SeriesSpec, TimeIndex}
 /** Readers for the driver testdata plus the canonical long-form series
   * adapter. All scans are plain parquet relations so Catalyst pushes
   * filters/projections into the scan.
+  *
+  * Every reader reads through [[FileSchemas]]: a table's schema is
+  * inferred on the first read of a version of its file (qualified path,
+  * each leaf file's length and modification time, read options and the
+  * inference confs) and given to every later read, so building a query
+  * over tables read before runs no Spark job. The memo keeps at most
+  * [[FileSchemas.MaxEntries]] versions. [[replicate]] reads raw: its
+  * files are new on every run.
   */
 object Tables {
+
+  private def parquet(spark: SparkSession, dir: String, table: String): DataFrame =
+    FileSchemas.read(spark, "parquet", s"$dir/$table.parquet")
 
   /** events.parquet: the canonical reader is schema-adaptive because the
     * driver has shipped `ts` under three parquet physical contracts over
@@ -29,7 +40,7 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String,
       sliceUs: Option[(Long, Long)] = None): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, dir, "events")
 
     def sliced(loLit: Long => Column): DataFrame = sliceUs match {
       case Some((lo, hi)) =>
@@ -70,19 +81,19 @@ object Tables {
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    parquet(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/orders.parquet")
+    parquet(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/customer.parquet")
+    parquet(spark, dir, "customer")
   def supplier(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/supplier.parquet")
+    parquet(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/part.parquet")
+    parquet(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/nation.parquet")
+    parquet(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/region.parquet")
+    parquet(spark, dir, "region")
   /** documents is deliberately NOT fanned out here: a central FanOut
     * was A/B'd in r15 and lost — ~60 cheap consumers (driver-round
     * trainers re-executing the exchange every round, broadcast-side
@@ -91,9 +102,9 @@ object Tables {
     * at their own entry instead.
     */
   def documents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    parquet(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    parquet(spark, dir, "embeddings")
 
   /** The events stream as a canonical long-form series table:
     * `user_id` is the series key, `value` the measurement; duplicate

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Dedup, Multimodal, Sampling, Similarity, TextStats, TextStatsReference}
+import graft.ext.{Dedup, DedupReference, Multimodal, Sampling, Similarity, TextStats,
+  TextStatsReference}
 
 class ExtSpec extends SparkTestBase {
 
@@ -2190,4 +2191,68 @@ class ExtSpec extends SparkTestBase {
 
   private def round4(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Verify-family fixtures: short docs (one word, empty, NULL), docs
+    * with shingles repeated inside them, and either a few near-dup
+    * pairs among unrelated docs (candidates cover under half of the
+    * shingled docs, the reference's restricting branch) or a corpus of
+    * near-copies of one text (candidates cover more than half).
+    */
+  private def verifyFixture(fewCandidates: Boolean): DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    def text(n: Int): Seq[String] = Seq.fill(n)(s"w${rnd.nextInt(3000)}")
+    val base = text(30)
+    val body =
+      if (fewCandidates) {
+        val unrelated = (0 until 40).map(i => (i.toLong, text(30)))
+        val (d0, d1, d2) = (unrelated(0)._2, unrelated(1)._2, unrelated(2)._2)
+        unrelated ++ Seq(
+          100L -> d0.updated(4, "x1").updated(20, "x2"),
+          101L -> (d1 ++ Seq("y1", "y2")),
+          102L -> (text(20) ++ d2 ++ text(20)))
+      } else
+        (0 until 24).map(i => (i.toLong,
+          base.updated(rnd.nextInt(30), s"v$i").updated(rnd.nextInt(30), s"u$i")))
+    // the same three distinct shingles, 8 and 4 times: jaccard 1 only
+    // when sizes count distinct shingles
+    val repeated = Seq(300L -> Seq("r", "s", "r", "s", "r", "s", "r", "s", "t"),
+      301L -> Seq("r", "s", "r", "s", "t"))
+    val rows = (body ++ repeated).map { case (id, ws) => (id, Option(ws.mkString(" "))) } ++
+      Seq(200L -> Some("solo"), 201L -> Some(""), 202L -> None)
+    rows.toDF("doc_id", "text")
+  }
+
+  test("verify family equals its cached-shingle-table reference") {
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    val orig = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq("3", "16"); few <- Seq(true, false)) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      val d = verifyFixture(few)
+      val cases = Seq(
+        "minHashLsh" -> (
+          Dedup.minHashLsh(d, "doc_id", "text", k = 2, numHashes = 12, bands = 6,
+            threshold = 0.3),
+          DedupReference.minHashLsh(d, "doc_id", "text", k = 2, numHashes = 12,
+            bands = 6, threshold = 0.3)),
+        "ngramJaccardCapped" -> (
+          Dedup.ngramJaccardCapped(d, "doc_id", "text", k = 2, threshold = 0.3,
+            maxDf = 30),
+          DedupReference.ngramJaccardCapped(d, "doc_id", "text", k = 2,
+            threshold = 0.3, maxDf = 30)),
+        "containmentPairs" -> (
+          Dedup.containmentPairs(d, "doc_id", "text", k = 2, threshold = 0.5,
+            maxDf = 30),
+          DedupReference.containmentPairs(d, "doc_id", "text", k = 2,
+            threshold = 0.5, maxDf = 30)))
+      try cases.foreach { case (op, (got, ref)) =>
+        val (g, r) = (sorted(got), sorted(ref))
+        val at = s"$op, ${if (few) "few" else "many"} candidates, $parts partitions"
+        assert(got.schema == ref.schema, at)
+        assert(g == r, at)
+        assert(r.exists(row => row.take(2) == Seq(300L, 301L)), s"$at: repeated-shingle pair")
+        assert(r.size >= (if (few) 3 else 20), s"$at: ${r.size} pairs")
+      } finally graft.core.Caches.unpersistAll()
+    } finally spark.conf.set("spark.sql.shuffle.partitions", orig)
+  }
 }

@@ -136,7 +136,28 @@ class PlanGuardSpec extends SparkTestBase {
         k = 3, threshold = 0.5, maxDf = 20)
       assert(forcedHints(ng).isEmpty,
         "ngramJaccardCapped must not force a join strategy on the candidate set")
+      val cp = Dedup.containmentPairs(docs, "doc_id", "text",
+        k = 2, threshold = 0.8, maxDf = 20)
+      assert(forcedHints(cp).isEmpty,
+        "containmentPairs must not force a join strategy on the candidate set")
       graft.core.Caches.unpersistAll()
+    }
+  }
+
+  test("dedup verify family reads one shingle aggregate, cached nowhere") {
+    val docs = Tables.documents(spark, sfDir)
+    val plans = Seq(
+      "minHashLsh" -> Dedup.minHashLsh(docs, "doc_id", "text",
+        k = 2, numHashes = 12, bands = 6, threshold = 0.5),
+      "ngramJaccardCapped" -> Dedup.ngramJaccardCapped(docs, "doc_id", "text",
+        k = 2, threshold = 0.5, maxDf = 20),
+      "containmentPairs" -> Dedup.containmentPairs(docs, "doc_id", "text",
+        k = 2, threshold = 0.8, maxDf = 20))
+    plans.foreach { case (op, df) =>
+      val cached = df.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(cached.isEmpty, s"$op plans over a cached relation")
     }
   }
 

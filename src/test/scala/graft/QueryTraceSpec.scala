@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.CyclicBarrier
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -89,5 +90,23 @@ class QueryTraceSpec extends SparkTestBase with BeforeAndAfterAll {
       assert(cp.jobs == sp.jobs)
     }
     assert(serial(0).exec.tasks != serial(1).exec.tasks)
+  }
+
+  test("registry sweep queries and the verify family build without a job") {
+    // the benchmark's sweep set, read from its registry
+    val py = new String(Files.readAllBytes(Paths.get("perfbench/registry.py")), "UTF-8")
+    val block = py.substring(py.indexOf("SWEEP = {"))
+    val sweep = "\"(q\\w+)\":".r.findAllMatchIn(block.take(block.indexOf("}")))
+      .map(_.group(1)).toSeq
+    assert(sweep.size == 10 && sweep.contains("q_dedup_minhash"))
+    val sfDir = "/root/testdata/sf0.001"
+    try (sweep ++ Seq("q_dedup_ngram_capped", "q_containment")).foreach { name =>
+      // one warm read: each table's schema is inferred on its first read
+      SparkEntry.queries(name)(spark, sfDir)
+      graft.core.Caches.unpersistAll()
+      val t = ok(tracer.run(SparkEntry.queries(name)(spark, sfDir)))
+      assert(t.build.jobs == 0, s"$name ran ${t.build.jobs} jobs while it built")
+      graft.core.Caches.unpersistAll()
+    } finally graft.core.Caches.unpersistAll()
   }
 }
