@@ -207,29 +207,6 @@ object Dedup {
       scored.select(col("id_a"), col("id_b"), round(col(scoreCol), 6).as(scoreCol))
   }
 
-  /** Exact pairwise n-gram Jaccard via inverted-index join (only
-    * pairs sharing ≥1 shingle are scored — no cross join).
-    * Output: id_a < id_b, inter, jaccard (≥ threshold).
-    */
-  def ngramJaccard(df: DataFrame, id: String, text: String, k: Int,
-      threshold: Double): DataFrame = {
-    val sh = graft.core.Caches.cached(shinglesHashed(df, id, text, k))
-    val sizes = sh.groupBy(id).agg(count(lit(1)).as("n"))
-    val pairs = sh.as("a")
-      .join(sh.as("b"),
-        col("a.sh60") === col("b.sh60") && col(s"a.$id") < col(s"b.$id"))
-      .groupBy(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    pairs
-      .join(sizes.withColumnRenamed(id, "id_a").withColumnRenamed("n", "na"), "id_a")
-      .join(sizes.withColumnRenamed(id, "id_b").withColumnRenamed("n", "nb"), "id_b")
-      .withColumn("jaccard",
-        col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("inter"),
-        round(col("jaccard"), 6).as("jaccard"))
-  }
-
   /** Document-frequency-capped n-gram Jaccard: the inverted-index
     * candidate join is restricted to shingles appearing in ≤ maxDf
     * documents — the standard hot-shingle cap that bounds the
@@ -273,10 +250,12 @@ object Dedup {
       .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b")).distinct()
   }
 
-  /** Prefix-filtered EXACT n-gram Jaccard — identical output to
-    * [[ngramJaccard]] (every pair with J ≥ threshold, exact scores)
-    * with subquadratic candidate generation, the classic All-Pairs /
-    * PPJoin shape (Bayardo et al., WWW'07; Xiao et al., WWW'08).
+  /** Exact pairwise n-gram Jaccard: every pair with J ≥ threshold,
+    * exact scores — the same pairs as the inverted-index self-join
+    * over every shingle (ExtSpec pins the two equal across
+    * thresholds), with subquadratic candidate generation, the classic
+    * All-Pairs / PPJoin prefix filter (Bayardo et al., WWW'07; Xiao
+    * et al., WWW'08).
     *
     * Every document's shingles are ranked by one GLOBAL total order
     * (document frequency asc, hash asc — rarest first) and only its
@@ -947,7 +926,7 @@ object Dedup {
     * shuffle volume is bounded by the benchmark size instead of the
     * corpus size. False positives cost only wasted join probes; the
     * verify join makes the OUTPUT exactly [[decontaminate]]'s
-    * (DedupSpec pins equality, and the query shares its oracle).
+    * (ExtSpec pins equality, and the query shares its oracle).
     *
     * The probe is the codegen'd
     * [[graft.functions.BloomContains]] expression (round 13; it was
@@ -989,51 +968,42 @@ object Dedup {
     * Plain neighbor-min needs O(diameter) rounds (a 10⁶-node chain of
     * boilerplate dups would need 10⁶ rounds); shortcutting halves the
     * effective diameter every round, so convergence is O(log n)
-    * rounds of pure equi-joins — the standard large-graph CC shape on
-    * Spark. The driver loop only inspects a per-round changed-count
-    * scalar; all data stays distributed.
+    * rounds — the standard large-graph CC shape on Spark. The driver
+    * loop only inspects a per-round changed-count scalar; all data
+    * stays distributed.
+    *
+    * The loop state is `RDD[(Long, Long)]` under one fixed
+    * HashPartitioner, so the per-round dataflow is two co-partitioned
+    * (zero-shuffle) joins plus tiny reduceByKey shuffles, with NO
+    * per-round planning or codegen. A DataFrame loop builds a new plan
+    * over the checkpointed label table every round and pays Catalyst
+    * analysis + AQE planning + whole-stage codegen each time (profiled
+    * at sf0.1: ~6 janino units ≈ 0.6 s of every 0.8 s round); the RDD
+    * loop measured ~4× faster on the full CC chain. This is the
+    * documented "genuine per-partition imperative logic" RDD
+    * exception; ExtSpec pins its labels to a DataFrame formulation of
+    * the same propagation. Hence the key must be bigint: any other
+    * type of `ids(id)` fails with an IllegalArgumentException naming
+    * the column and its type.
+    *
+    * Scale shape: state is the CONTRACTED dup-subgraph label table
+    * (never the corpus — a node with no edge cannot change its label,
+    * so isolated docs rejoin with one left join at the end), per-round
+    * shuffles move O(|edges|) longs, and lineage is truncated every
+    * round (localCheckpoint; blocks reclaimed by the ContextCleaner
+    * once the returned plan drops its reference).
     *
     * Output: id, cluster_id (min id of the component), is_keeper.
     */
   def dupClusters(ids: DataFrame, pairs: DataFrame, id: String,
-      maxIter: Int = 25): DataFrame =
-    if (ids.schema(id).dataType ==
-        org.apache.spark.sql.types.LongType)
-      dupClustersRdd(ids, pairs, id, maxIter)
-    else dupClustersSql(ids, pairs, id, maxIter)
-
-  /** The long-id fast path of [[dupClusters]] — identical labels,
-    * RDD-loop internals. Iterative label propagation is the one
-    * place the DataFrame API taxes structurally: every round builds
-    * a NEW plan over the checkpointed label table, so each of the
-    * ~log(diameter) rounds pays Catalyst analysis + AQE planning +
-    * whole-stage codegen compilation from scratch (profiled at
-    * sf0.1: ~6 janino units ≈ 0.6 s of every 0.8 s round; unrolling
-    * two propagation steps per round made it WORSE — plan size
-    * doubles faster than round count halves). The GraphX-shaped
-    * fix: keep the loop state as `RDD[(Long, Long)]` under one fixed
-    * HashPartitioner — the per-round dataflow is then two
-    * co-partitioned (zero-shuffle) joins plus tiny reduceByKey
-    * shuffles, with NO per-round planning or codegen at all
-    * (measured ~4× on the full CC chain). Spark-first rationale:
-    * this is the documented "genuine per-partition imperative
-    * logic" RDD exception — the DataFrame twin below remains the
-    * reference semantics (and serves non-long key types), and
-    * DedupSpec pins label equality between the two.
-    *
-    * Scale shape is unchanged from the SQL loop: state is the
-    * CONTRACTED dup-subgraph label table (never the corpus),
-    * per-round shuffles move O(|edges|) longs, lineage is truncated
-    * every round (localCheckpoint; blocks reclaimed by the
-    * ContextCleaner once the returned plan drops its reference —
-    * the same lifecycle the checkpointed SQL loop had).
-    */
-  private[graft] def dupClustersRdd(ids: DataFrame, pairs: DataFrame, id: String,
-      maxIter: Int): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
+    val keyType = ids.schema(id).dataType
+    require(keyType == org.apache.spark.sql.types.LongType,
+      s"dupClusters needs a bigint key, but column '$id' is ${keyType.simpleString}")
     val spark = ids.sparkSession
     val sc = spark.sparkContext
-    // NULL endpoints contribute nothing, matching the SQL twin's
-    // join semantics (Row.getLong on a null would NPE the task)
+    // NULL endpoints contribute nothing, as an equi-join would drop
+    // them (Row.getLong on a null would NPE the task)
     val edgesRaw = pairs
       .filter(col("id_a").isNotNull && col("id_b").isNotNull)
       .select(col("id_a").cast("long"), col("id_b").cast("long")).rdd
@@ -1066,8 +1036,7 @@ object Dedup {
     // the JVM lifetime — unpersist everything before rethrowing.
     // On success the final label checkpoint intentionally survives
     // (the returned plan reads it; the ContextCleaner reclaims it
-    // once unreferenced, the same lifecycle as the SQL twin's
-    // checkpointed rounds).
+    // once unreferenced).
     var labels = edges
       .map { case (src, dst) => (dst, src) }
       .reduceByKey(part, math.min(_: Long, _: Long))
@@ -1122,87 +1091,6 @@ object Dedup {
     val labelsDf = spark.createDataFrame(labels).toDF("nid", "__lbl")
     ids.select(col(id).as("nid"))
       .join(labelsDf, Seq("nid"), "left")
-      .select(col("nid").as(id),
-        coalesce(col("__lbl"), col("nid")).as("cluster_id"),
-        (col("nid") === coalesce(col("__lbl"), col("nid"))).as("is_keeper"))
-  }
-
-  private[graft] def dupClustersSql(ids: DataFrame, pairs: DataFrame, id: String,
-      maxIter: Int = 25): DataFrame = {
-    val edges = graft.core.Caches.cached(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    // Each round must TRUNCATE lineage (localCheckpoint, eager): the
-    // hop self-join doubles the logical plan per round, so carrying
-    // lineage makes round k's analysis cost O(2^k) — the standard
-    // iterative-graph pitfall. Checkpointing keeps every round's plan
-    // a constant two joins over materialized label tables. (On a
-    // cluster, reliable checkpointing can replace localCheckpoint
-    // when lineage-free fault tolerance is required.)
-    // Seed with one neighbor-min PRE-PASS: round 0's labels are the ids
-    // themselves, so its neighbor-min is computable straight off the
-    // edge table (min incoming src per dst) and its pointer-doubling
-    // hop is the identity — the whole first round folds into one
-    // aggregate + left join at seed time, saving a full loop round
-    // (2 joins + self-join + checkpoint + count).
-    // Iterate over the CONTRACTED graph only: a node with no edge can
-    // never change its label, so isolated docs — the overwhelming
-    // majority of any real corpus — are excluded from every round's
-    // joins and folded back with a single left join at the end. Round
-    // cost scales with the duplicate-pair volume, not the corpus size:
-    // at 100 TB the label table inside the loop is the (tiny) dup
-    // subgraph, not billions of singleton docs. The seed aggregate's
-    // key set (edge dst endpoints, both directions unioned) IS the
-    // contracted node set, so seeding needs no extra join at all.
-    val seedMin = edges.groupBy(col("dst").as("nid"))
-      .agg(min(col("src")).as("__nlbl"))
-    var labels = seedMin
-      .select(col("nid"),
-        least(col("nid"), col("__nlbl")).as("lbl"))
-      .localCheckpoint(true)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      val cur = labels
-      // neighbor min: for each dst, the smallest label among its sources
-      val nbrMin = edges.join(cur, edges("src") === cur("nid"))
-        .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-      // pointer doubling: my label's current label. (A 4-step composed
-      // hop — m2 = lbl∘lbl, m4 = m2∘m2 — was tried and measured: round
-      // count stayed at 7 while rounds got costlier, because the
-      // binding constraint here is neighbor-min edge propagation, not
-      // pointer-chain depth; deeper shortcuts don't push labels across
-      // edges any faster.)
-      val hop = cur.select(col("lbl").as("hop_from"), col("nid"))
-        .join(cur.select(col("nid").as("hop_from"), col("lbl").as("hlbl")),
-          "hop_from")
-        .select(col("nid"), col("hlbl"))
-      val next = cur
-        .join(nbrMin, cur("nid") === nbrMin("dst"), "left")
-        .join(hop, "nid")
-        .select(col("nid"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl")), col("hlbl")).as("lbl"),
-          (least(col("lbl"), coalesce(col("nlbl"), col("lbl")), col("hlbl")) =!=
-            col("lbl")).as("__chg"))
-        .localCheckpoint(false)
-      // LAZY checkpoint + count = ONE job per round: the count action
-      // materializes the checkpoint blocks it scans, so the round pays
-      // a single scheduling barrier instead of eager-materialize +
-      // count (measured ~0.1 s/round at sf0.1; plan truncation is
-      // identical — Dataset.localCheckpoint cuts lineage regardless of
-      // eagerness). Check convergence EVERY round: batching the count
-      // to every 2nd round (tried in an earlier revision) makes a
-      // fixed point reached on an odd round pay one extra full
-      // propagation round, which costs far more than the count it
-      // saves.
-      converged = next.filter(col("__chg")).count() == 0
-      labels = next.drop("__chg")
-      it += 1
-    }
-    require(converged, s"dupClusters did not converge in $maxIter rounds")
-    // fold isolated nodes back in: no edge → own cluster, keeper
-    ids.select(col(id).as("nid"))
-      .join(labels.withColumnRenamed("lbl", "__lbl"), Seq("nid"), "left")
       .select(col("nid").as(id),
         coalesce(col("__lbl"), col("nid")).as("cluster_id"),
         (col("nid") === coalesce(col("__lbl"), col("nid"))).as("is_keeper"))

@@ -207,8 +207,8 @@ object Similarity {
     val cents = lloyd(sample, nlist, iters)
     // Cell assignment is a pure projection (no broadcast join, no
     // per-row window sort over the corpus) through the NATIVE
-    // NearestCells kernel — the declarative HOF twin below it is
-    // spec-pinned equal; the corpus leg pays this per row, and at
+    // NearestCells kernel — ExtSpec pins it equal to the declarative
+    // higher-order-function fold; the corpus leg pays this per row, and at
     // cluster scale nlist grows with the corpus, so the interpreted
     // per-centroid fold was the serving path's scale term.
     val corpusCells = corpus
@@ -234,38 +234,11 @@ object Similarity {
     * lower cell id) as an `array<int>` column — the native
     * [[graft.functions.NearestCells]] kernel.
     */
-  private def nearCells(cents: Array[Array[Double]], vecCol: Column,
+  private[graft] def nearCells(cents: Array[Array[Double]], vecCol: Column,
       keep: Int): Column =
     org.apache.spark.sql.graftbridge.Columns.of(
       graft.functions.NearestCells(
         org.apache.spark.sql.graftbridge.Columns.expr(vecCol), cents, keep))
-
-  /** Test-visible alias of the native [[nearCells]] (the method
-    * itself stays private so callers go through [[ivfTopK]]).
-    */
-  private[graft] def nearCellsTest(cents: Array[Array[Double]],
-      vecCol: Column, keep: Int): Column = nearCells(cents, vecCol, keep)
-
-  /** The declarative HOF twin of [[nearCells]] — per centroid the
-    * sequential squared-difference fold inside transform →
-    * array_sort → slice, cells projected out. Spec-pinned equal to
-    * the native kernel (the assignCellsHof discipline); interpreted
-    * per-centroid lambdas, so nothing ships on it.
-    */
-  private[graft] def nearCellsHof(cents: Array[Array[Double]],
-      vecCol: Column, keep: Int): Column = {
-    val centArr = array(cents.zipWithIndex.map { case (c, i) =>
-      struct(lit(i).as("cell"), typedLit(c.toSeq).as("cent"))
-    }: _*)
-    def dist2(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) =>
-        (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-        lit(0.0), (acc, v) => acc + v)
-    transform(slice(array_sort(transform(centArr, ct =>
-      struct(dist2(vecCol, ct.getField("cent")).as("d2"),
-        ct.getField("cell").as("cell")))), 1, keep),
-      st => st.getField("cell"))
-  }
 
   /** Product-quantization codebooks: `m` subspaces × `ksub` centroids
     * each (trained per subspace with the deterministic driver-side Lloyd on a
@@ -598,8 +571,10 @@ object Similarity {
     * is O(√k + E|group|) ≈ O(√k) instead of the flat quantizer's O(k)
     * — the term that was quadratic on the SemDeDup k ∝ n axis (seeds
     * grow with the corpus to keep E|cell| constant). Both levels are
-    * pure projections: per candidate struct(-cos, seed_id),
-    * array_sort, head — double negation is exact, so ascending -cos ≡
+    * pure projections through the native
+    * [[graft.functions.NearestSeedCell]] kernel, which ExtSpec pins to
+    * the declarative form: per candidate struct(-cos, seed_id),
+    * array_min — double negation is exact, so ascending -cos ≡
     * descending cos, ties to the smaller seed id; the fine level is a
     * literal map lookup coarse_id → its seed group. Coarse seeds
     * group to THEMSELVES (not their argmax), which guarantees every
@@ -615,23 +590,36 @@ object Similarity {
     * Output: id, __v (the vector), __n (its norm), cell.
     */
   def assignCells(df: DataFrame, id: String, vec: String,
-      nSeeds: Int, nCoarse: Int = 0): DataFrame =
-    assignCellsImpl(df, id, vec, nSeeds, nCoarse, native = true)
+      nSeeds: Int, nCoarse: Int = 0): DataFrame = {
+    val sg = seedGroups(df, id, vec, nSeeds, nCoarse)
+    // groups re-keyed by coarse POSITION for the native kernel
+    val groupByCid = sg.groups.toMap
+    val fineByPos = sg.coarse.map { case (cid, _) => groupByCid(cid) }
+    val cellExpr = graft.functions.NearestSeedCell(
+      org.apache.spark.sql.graftbridge.Columns.expr(col("__v")),
+      org.apache.spark.sql.graftbridge.Columns.expr(col("__n")),
+      sg.coarse.map(_._2), sg.coarseNorm,
+      fineByPos.map(_.map(_._1)), fineByPos.map(_.map(_._2)),
+      fineByPos.map(_.map(s => normD(s._2))))
+    df.select(col(id), col(vec).as("__v"), norm(col(vec)).as("__n"))
+      .withColumn("cell", org.apache.spark.sql.graftbridge.Columns.of(cellExpr))
+  }
 
-  /** The declarative higher-order-function twin of [[assignCells]] —
-    * per candidate struct(−safeCosine, seed_id) inside transform →
-    * array_min, coarse then fine (literal map lookup by coarse id).
-    * Kept as the spec-pinned reference implementation for the native
-    * [[graft.functions.NearestSeedCell]] kernel (the dupClustersRdd /
-    * dupClustersSql twin discipline); ~40× slower per row at bench
-    * candidate counts, so nothing ships on it.
+  /** [[assignCells]]' driver-side seed table: the coarse seeds in
+    * ascending id order with their norms, and every seed grouped
+    * under its coarse seed.
     */
-  private[graft] def assignCellsHof(df: DataFrame, id: String, vec: String,
-      nSeeds: Int, nCoarse: Int = 0): DataFrame =
-    assignCellsImpl(df, id, vec, nSeeds, nCoarse, native = false)
+  private[graft] final case class SeedGroups(
+      coarse: Array[(Long, Array[Float])],
+      coarseNorm: Array[Double],
+      groups: Seq[(Long, Array[(Long, Array[Float])])])
 
-  private def assignCellsImpl(df: DataFrame, id: String, vec: String,
-      nSeeds: Int, nCoarse: Int, native: Boolean): DataFrame = {
+  /** Collect the pinned seeds and group them by coarse cell — the one
+    * grouping both the native [[assignCells]] and its spec reference
+    * build their candidates from, so the two cannot drift.
+    */
+  private[graft] def seedGroups(df: DataFrame, id: String, vec: String,
+      nSeeds: Int, nCoarse: Int): SeedGroups = {
     val seeds: Array[(Long, Array[Float])] = df.orderBy(col(id))
       .limit(nSeeds)
       .select(col(id).cast("long"), col(vec)).collect()
@@ -643,16 +631,6 @@ object Similarity {
       if (nCoarse > 0) nCoarse
       else math.ceil(math.sqrt(seeds.length.toDouble)).toInt)
     val coarse = seeds.take(nc)
-    // driver-side mirrors of graft_dot / the oracle's list_sum: the
-    // identical sequential left fold (float→double casts are exact,
-    // one correctly-rounded op per step) so the grouping both engines
-    // derive independently is the same grouping
-    def dotD(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
-    def normD(a: Array[Float]): Double = math.sqrt(dotD(a, a))
     val coarseNorm = coarse.map(c => normD(c._2))
     def coarseOf(v: Array[Float]): Long = {
       val nv = normD(v)
@@ -662,8 +640,8 @@ object Similarity {
       while (i < nc) {
         val den = nv * coarseNorm(i)
         // length mismatch pinned to -2.0 like every other undefined
-        // case (the kernel's cosOf and the coalesced HOF twin agree) —
-        // and dotD must not be reached with ragged arrays at all
+        // case (the kernel's cosOf and the coalesced HOF reference
+        // agree) — and dotD must not be reached with ragged arrays
         val c =
           if (v.length != coarse(i)._2.length || !(den > 0)) -2.0
           else dotD(v, coarse(i)._2) / den
@@ -677,55 +655,25 @@ object Similarity {
     // id (groupBy preserves encounter order of the sorted seeds) —
     // the id-ascending layout is what makes position-order ties in
     // the native kernel identical to the HOF struct-min's id ties
-    val groups: Seq[(Long, Array[(Long, Array[Float])])] =
-      seeds.zipWithIndex
-        .map { case ((sid, sv), i) =>
-          (if (i < nc) sid else coarseOf(sv)) -> ((sid, sv))
-        }
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy(_._1)
-    val base = df.select(col(id), col(vec).as("__v"),
-      norm(col(vec)).as("__n"))
-    if (native) {
-      // groups re-keyed by coarse POSITION for the native kernel
-      val groupByCid = groups.toMap
-      val fineByPos = coarse.map { case (cid, _) => groupByCid(cid) }
-      val cellExpr = graft.functions.NearestSeedCell(
-        org.apache.spark.sql.graftbridge.Columns.expr(col("__v")),
-        org.apache.spark.sql.graftbridge.Columns.expr(col("__n")),
-        coarse.map(_._2), coarseNorm,
-        fineByPos.map(_.map(_._1)), fineByPos.map(_.map(_._2)),
-        fineByPos.map(_.map(s => normD(s._2))))
-      base.withColumn("cell",
-        org.apache.spark.sql.graftbridge.Columns.of(cellExpr))
-    } else {
-      // seed norms baked into the literal structs (halves the
-      // per-candidate fold work vs re-deriving norm(sv) per row); the
-      // argmax is array_min over (negcos, seed_id) structs — the same
-      // lexicographic ordering array_sort(...)[1] selects, in one
-      // O(c) pass instead of an O(c log c) sort per row.
-      def seedStruct(sid: Long, sv: Array[Float]): Column =
-        struct(lit(sid).as("seed_id"), typedLit(sv.toSeq).as("sv"),
-          lit(normD(sv)).as("snrm"))
-      // negcos coalesced to 2.0 (cos −2.0): a NULL dot — reachable
-      // only through a ragged (length-mismatched) or null vector —
-      // must LOSE against every real candidate, as it does in the
-      // native kernel (cosOf → −2.0) and in the oracle (DuckDB sorts
-      // NULL cos0 last under DESC). Without the coalesce, Spark's
-      // struct order puts the NULL field FIRST and the bad seed WINS.
-      def argmaxCell(candidates: Column): Column =
-        array_min(transform(candidates, st =>
-          struct(coalesce(
-            lit(0d) - safeCosine(dot(col("__v"), st.getField("sv")),
-              col("__n") * st.getField("snrm")), lit(2.0)).as("negcos"),
-            st.getField("seed_id").as("seed_id")))).getField("seed_id")
-      val coarseArr = array(coarse.map { case (cid, cv) => seedStruct(cid, cv) }: _*)
-      val groupMap = map(groups.flatMap { case (cid, ss) =>
-        Seq(lit(cid), array(ss.map { case (sid, sv) => seedStruct(sid, sv) }: _*))
-      }: _*)
-      base.withColumn("cell",
-        argmaxCell(element_at(groupMap, argmaxCell(coarseArr))))
-    }
+    val groups = seeds.zipWithIndex
+      .map { case ((sid, sv), i) =>
+        (if (i < nc) sid else coarseOf(sv)) -> ((sid, sv))
+      }
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy(_._1)
+    SeedGroups(coarse, coarseNorm, groups)
   }
+
+  // driver-side mirrors of graft_dot / the oracle's list_sum: the
+  // identical sequential left fold (float→double casts are exact,
+  // one correctly-rounded op per step) so the grouping both engines
+  // derive independently is the same grouping
+  private def dotD(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+
+  private[graft] def normD(a: Array[Float]): Double = math.sqrt(dotD(a, a))
 
   def semanticDedup(df: DataFrame, id: String, vec: String,
       nSeeds: Int = 16, tau: Double = 0.35, nCoarse: Int = 0): DataFrame = {

@@ -503,8 +503,11 @@ object DedupQueries {
         |       doc_id <> min(doc_id) OVER (PARTITION BY text_hash) AS is_duplicate
         |FROM h""".stripMargin)),
 
+    // exact n-gram jaccard at t=0.5: the prefix-filtered join returns
+    // every pair the full inverted-index self-join finds (lossless
+    // candidate pruning), so the oracle stays that quadratic self-join
     QueryDef("q_dedup_ngram", Family, (s, dir) =>
-      Dedup.ngramJaccard(Tables.documents(s, dir), "doc_id", "text",
+      Dedup.ngramJaccardPrefix(Tables.documents(s, dir), "doc_id", "text",
         k = 2, threshold = 0.5), Some(
       (shingleCte(2) + jaccardTail +
         """
@@ -515,7 +518,7 @@ object DedupQueries {
 
     // df-capped inverted index: hot shingles (document frequency >
     // maxDf) are dropped from the candidate join — the bound that keeps
-    // the exact baseline's quadratic blowup off the scale path — then
+    // a hot shingle's df² pair blowup off the scale path — then
     // candidates verify against FULL shingle sets (jaccard stays exact).
     QueryDef("q_dedup_ngram_capped", Family, (s, dir) =>
       Dedup.ngramJaccardCapped(Tables.documents(s, dir), "doc_id", "text",

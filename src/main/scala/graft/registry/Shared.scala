@@ -38,7 +38,7 @@ private[registry] object Shared {
     * IEEE folds): coarse = the ⌈√(actual seed count)⌉ smallest-id
     * seeds — derived relationally from sd, not from the nSeeds
     * parameter, because the engine derives it from the COLLECTED seed
-    * count (`assignCellsImpl`: min(seeds.length, ⌈√seeds.length⌉))
+    * count (`Similarity.seedGroups`: min(seeds.length, ⌈√seeds.length⌉))
     * and the two must agree when the table has fewer than nSeeds rows
     * (latent at the shipped SFs, all of which exceed nSeeds); each seed
     * groups to its argmax-cosine coarse seed EXCEPT coarse seeds,

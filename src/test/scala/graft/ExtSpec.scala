@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Dedup, DedupReference, Multimodal, Sampling, Similarity, TextStats,
-  TextStatsReference}
+import graft.ext.{Dedup, DedupReference, Multimodal, Sampling, Similarity,
+  SimilarityReference, TextStats, TextStatsReference}
 
 class ExtSpec extends SparkTestBase {
 
@@ -481,7 +481,7 @@ class ExtSpec extends SparkTestBase {
       val nat = Similarity.assignCells(emb, "vec_id", "embedding", nSeeds)
         .select("vec_id", "cell").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val hof = Similarity.assignCellsHof(emb, "vec_id", "embedding", nSeeds)
+      val hof = SimilarityReference.assignCellsHof(emb, "vec_id", "embedding", nSeeds)
         .select("vec_id", "cell").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(nat == hof, s"native/HOF divergence at nSeeds=$nSeeds")
@@ -498,7 +498,7 @@ class ExtSpec extends SparkTestBase {
     val nat = Similarity.assignCells(fix, "vec_id", "embedding", 4)
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hof = Similarity.assignCellsHof(fix, "vec_id", "embedding", 4)
+    val hof = SimilarityReference.assignCellsHof(fix, "vec_id", "embedding", 4)
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(nat == hof)
@@ -520,7 +520,7 @@ class ExtSpec extends SparkTestBase {
     val natR = Similarity.assignCells(ragged, "vec_id", "embedding", 3)
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hofR = Similarity.assignCellsHof(ragged, "vec_id", "embedding", 3)
+    val hofR = SimilarityReference.assignCellsHof(ragged, "vec_id", "embedding", 3)
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(natR == hofR, s"native/HOF divergence on ragged seed:\n$natR\nvs\n$hofR")
@@ -548,10 +548,10 @@ class ExtSpec extends SparkTestBase {
       (4L, Array(1.0f, 0.0f)), // length mismatch
       (5L, Array(0.5f, 0.5f, 0.0f))).toDF("vec_id", "embedding")
     for (keep <- Seq(1, 2, 4, 7)) { // 7 > nlist exercises the clamp
-      val nat = vecs.select(col("vec_id"), Similarity.nearCellsTest(
+      val nat = vecs.select(col("vec_id"), Similarity.nearCells(
           cents, col("embedding"), keep).as("cells"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      val hof = vecs.select(col("vec_id"), Similarity.nearCellsHof(
+      val hof = vecs.select(col("vec_id"), SimilarityReference.nearCellsHof(
           cents, col("embedding"), keep).as("cells"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
       assert(nat == hof, s"native/HOF divergence at keep=$keep:\n$nat\nvs\n$hof")
@@ -572,10 +572,10 @@ class ExtSpec extends SparkTestBase {
       (1L, Array(Float.PositiveInfinity, 0.0f, 0.0f)),
       (2L, Array(0.5f, 0.5f, 0.5f))).toDF("vec_id", "embedding")
     for (keep <- Seq(1, 2, 3)) {
-      val nat = nfVecs.select(col("vec_id"), Similarity.nearCellsTest(
+      val nat = nfVecs.select(col("vec_id"), Similarity.nearCells(
           nanCents, col("embedding"), keep).as("cells"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      val hof = nfVecs.select(col("vec_id"), Similarity.nearCellsHof(
+      val hof = nfVecs.select(col("vec_id"), SimilarityReference.nearCellsHof(
           nanCents, col("embedding"), keep).as("cells"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
       assert(nat == hof,
@@ -587,10 +587,10 @@ class ExtSpec extends SparkTestBase {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val wide = Array.tabulate(8)(c => Array.tabulate(64)(j =>
       math.sin(c * 17 + j) * 0.3))
-    val n2 = emb.select(col("vec_id"), Similarity.nearCellsTest(
+    val n2 = emb.select(col("vec_id"), Similarity.nearCells(
         wide, col("embedding"), 2).as("cells"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val h2 = emb.select(col("vec_id"), Similarity.nearCellsHof(
+    val h2 = emb.select(col("vec_id"), SimilarityReference.nearCellsHof(
         wide, col("embedding"), 2).as("cells"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(n2 == h2)
@@ -1011,11 +1011,11 @@ class ExtSpec extends SparkTestBase {
     assert(out.count(_.getBoolean(2)) == 1)
   }
 
-  test("dupClusters: RDD fast path ≡ SQL twin label for label") {
+  test("dupClusters ≡ DedupReference.dupClustersSql label for label") {
     import spark.implicits._
-    // the long-id fast path (RDD loop, fixed partitioner) must emit
-    // exactly the SQL loop's labels — chain + clique + bridge +
-    // singletons, plus a seeded random slice
+    // the RDD loop (fixed partitioner) must emit exactly the
+    // DataFrame loop's labels — chain + clique + bridge + singletons,
+    // plus a seeded random slice
     val rnd = new scala.util.Random(7)
     val n = 200
     val edges = ((0L until 60L).map(i => (i, i + 1)) ++ // long chain
@@ -1024,8 +1024,8 @@ class ExtSpec extends SparkTestBase {
       .filter { case (a, b) => a != b }
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
     val ids = (0L until n).toDF("doc_id")
-    // NULL endpoints must be ignored by BOTH paths (SQL join
-    // semantics drop them; the RDD path must not NPE on getLong)
+    // NULL endpoints must be ignored by BOTH loops (the reference's
+    // equi-joins drop them; the RDD loop must not NPE on getLong)
     val pairs = edges
       .map { case (a, b) =>
         (java.lang.Long.valueOf(a), java.lang.Long.valueOf(b))
@@ -1035,13 +1035,26 @@ class ExtSpec extends SparkTestBase {
         (null.asInstanceOf[java.lang.Long], java.lang.Long.valueOf(3L)),
         (java.lang.Long.valueOf(5L), null.asInstanceOf[java.lang.Long]))
         .toDF("id_a", "id_b"))
-    val viaRdd = Dedup.dupClustersRdd(ids, pairs, "doc_id", 25)
+    val viaRdd = Dedup.dupClusters(ids, pairs, "doc_id", 25)
       .collect().map(_.toString).sorted.toSeq
     graft.core.Caches.unpersistAll()
-    val viaSql = Dedup.dupClustersSql(ids, pairs, "doc_id", 25)
+    val viaSql = DedupReference.dupClustersSql(ids, pairs, "doc_id", 25)
       .collect().map(_.toString).sorted.toSeq
     graft.core.Caches.unpersistAll()
     assert(viaRdd == viaSql)
+  }
+
+  test("dupClusters rejects a non-bigint key, naming the column and its type") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+    for ((ids, typ) <- Seq(
+        Seq(1, 2, 3).toDF("doc_id") -> "int",
+        Seq("1", "2", "3").toDF("doc_id") -> "string")) {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.dupClusters(ids, pairs, "doc_id")
+      }
+      assert(e.getMessage.contains(s"'doc_id' is $typ"), e.getMessage)
+    }
   }
 
   test("dupClusters: random graphs match a union-find oracle") {
@@ -1393,7 +1406,7 @@ class ExtSpec extends SparkTestBase {
       (2L, s"$hot a b c d e f g x"),
       (3L, s"$hot p q r"),
       (4L, s"$hot t u v"))
-    val exact = Dedup.ngramJaccard(d, "doc_id", "text", k = 2, threshold = 0.1)
+    val exact = DedupReference.ngramJaccard(d, "doc_id", "text", k = 2, threshold = 0.1)
       .orderBy("id_a", "id_b").collect()
     val capped = Dedup.ngramJaccardCapped(d, "doc_id", "text", k = 2,
       threshold = 0.1, maxDf = 2)
@@ -1413,7 +1426,7 @@ class ExtSpec extends SparkTestBase {
     val d = sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") < 400)
     for (t <- Seq(0.3, 0.5, 0.8)) {
-      val exact = Dedup.ngramJaccard(d, "doc_id", "text", k = 2, threshold = t)
+      val exact = DedupReference.ngramJaccard(d, "doc_id", "text", k = 2, threshold = t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getAs[Double]("jaccard"))).toSet
       val prefix = Dedup.ngramJaccardPrefix(d, "doc_id", "text", k = 2,
@@ -1423,6 +1436,26 @@ class ExtSpec extends SparkTestBase {
       assert(prefix == exact, s"prefix-filter lost or invented pairs at t=$t")
       assert(exact.nonEmpty || t > 0.5) // the low thresholds must exercise pairs
     }
+    // boilerplate corpus: a 5-word vocabulary makes every bigram hot
+    // (each sits in most docs), so prefixes prune little and the
+    // length and positional filters decide the candidates
+    val rnd = new scala.util.Random(11)
+    val vocab = Seq("lorem", "ipsum", "dolor", "sit", "amet")
+    val boiler = docs((1L to 60L).map(i =>
+      i -> Seq.fill(8 + rnd.nextInt(25))(vocab(rnd.nextInt(vocab.size))).mkString(" ")): _*)
+    val orig = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq("3", "16")) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1),
+        r.getLong(2), r.getAs[Double]("jaccard"))).toSet
+      val exact = rows(DedupReference.ngramJaccard(boiler, "doc_id", "text", k = 2,
+        threshold = 0.5))
+      val prefix = rows(Dedup.ngramJaccardPrefix(boiler, "doc_id", "text", k = 2,
+        threshold = 0.5))
+      graft.core.Caches.unpersistAll()
+      assert(prefix == exact, s"boilerplate corpus, $parts partitions")
+      assert(exact.size >= 100, s"boilerplate corpus: only ${exact.size} pairs")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", orig)
   }
 
   test("prefix index is smaller than the full inverted index") {

@@ -3,10 +3,12 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Reference formulations of the jaccard family's verify operators,
-  * which specs pin [[Dedup]] against; not part of the engine surface.
-  * They verify from a cached distinct shingle table instead of the
-  * engine's one per-document shingle aggregate.
+/** Reference formulations of [[Dedup]]'s operators, which specs pin
+  * the engine against; not part of the engine surface. The jaccard
+  * family verifies from a cached distinct shingle table instead of
+  * the engine's one per-document shingle aggregate; connected
+  * components run as a DataFrame loop instead of the engine's RDD
+  * loop.
   */
 object DedupReference {
 
@@ -79,5 +81,79 @@ object DedupReference {
           col(s"x.$id") < col(s"y.$id"))
       .select(col(s"x.$id").as("id_a"), col(s"y.$id").as("id_b")).distinct()
     verifyJaccard(sh, cands, id, threshold, withInter = false)
+  }
+
+  /** Exact pairwise n-gram Jaccard via the inverted-index self-join
+    * over EVERY shingle (a shingle shared by d docs yields d²/2
+    * candidate rows): the quadratic baseline [[Dedup.ngramJaccardPrefix]]
+    * must equal. Output: id_a < id_b, inter, jaccard (≥ threshold).
+    */
+  def ngramJaccard(df: DataFrame, id: String, text: String, k: Int,
+      threshold: Double): DataFrame = {
+    val sh = graft.core.Caches.cached(Dedup.shinglesHashed(df, id, text, k))
+    val sizes = sh.groupBy(id).agg(count(lit(1)).as("n"))
+    val pairs = sh.as("a")
+      .join(sh.as("b"),
+        col("a.sh60") === col("b.sh60") && col(s"a.$id") < col(s"b.$id"))
+      .groupBy(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
+      .agg(count(lit(1)).as("inter"))
+    pairs
+      .join(sizes.withColumnRenamed(id, "id_a").withColumnRenamed("n", "na"), "id_a")
+      .join(sizes.withColumnRenamed(id, "id_b").withColumnRenamed("n", "nb"), "id_b")
+      .withColumn("jaccard",
+        col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("inter"),
+        round(col("jaccard"), 6).as("jaccard"))
+  }
+
+  /** [[Dedup.dupClusters]]' labels from a DataFrame loop: min-label
+    * propagation with pointer doubling over the contracted edge table,
+    * each round a neighbor-min aggregate, a hop self-join and a
+    * localCheckpoint (the hop self-join doubles the logical plan per
+    * round, so carrying lineage would make round k's analysis
+    * O(2^k)). Round 0's neighbor-min is folded into the seed. Works
+    * for any orderable key type. NULL endpoints drop out of the
+    * equi-joins. Output: id, cluster_id, is_keeper.
+    */
+  def dupClustersSql(ids: DataFrame, pairs: DataFrame, id: String,
+      maxIter: Int = 25): DataFrame = {
+    val edges = graft.core.Caches.cached(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
+    val seedMin = edges.groupBy(col("dst").as("nid"))
+      .agg(min(col("src")).as("__nlbl"))
+    var labels = seedMin
+      .select(col("nid"),
+        least(col("nid"), col("__nlbl")).as("lbl"))
+      .localCheckpoint(true)
+    var converged = false
+    var it = 0
+    while (!converged && it < maxIter) {
+      val cur = labels
+      val nbrMin = edges.join(cur, edges("src") === cur("nid"))
+        .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
+      val hop = cur.select(col("lbl").as("hop_from"), col("nid"))
+        .join(cur.select(col("nid").as("hop_from"), col("lbl").as("hlbl")),
+          "hop_from")
+        .select(col("nid"), col("hlbl"))
+      val next = cur
+        .join(nbrMin, cur("nid") === nbrMin("dst"), "left")
+        .join(hop, "nid")
+        .select(col("nid"),
+          least(col("lbl"), coalesce(col("nlbl"), col("lbl")), col("hlbl")).as("lbl"),
+          (least(col("lbl"), coalesce(col("nlbl"), col("lbl")), col("hlbl")) =!=
+            col("lbl")).as("__chg"))
+        .localCheckpoint(false)
+      converged = next.filter(col("__chg")).count() == 0
+      labels = next.drop("__chg")
+      it += 1
+    }
+    require(converged, s"dupClustersSql did not converge in $maxIter rounds")
+    ids.select(col(id).as("nid"))
+      .join(labels.withColumnRenamed("lbl", "__lbl"), Seq("nid"), "left")
+      .select(col("nid").as(id),
+        coalesce(col("__lbl"), col("nid")).as("cluster_id"),
+        (col("nid") === coalesce(col("__lbl"), col("nid"))).as("is_keeper"))
   }
 }
